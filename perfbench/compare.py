@@ -10,8 +10,8 @@ Runs are JSON lines as `run.py --record FILE` appends them:
 For each workload and metric it prints the sample count, median and
 quartiles (statistics.quantiles(values, n=4)), and the spread: the
 quartile distance as a share of the median. With one set, each
-end-to-end spread is checked against its bound from BENCHMARK.json
-(setup_s is exempt, as it is only compared between sets). With two sets,
+end-to-end spread is checked against its bound from BENCHMARK.json.
+With two sets,
 each end-to-end metric is marked:
 
   agreeing    NEW's median is no worse than BASE's by more than the bound
@@ -102,9 +102,7 @@ def main(argv):
                               f"{med:.6g}", f"{q1:.6g}", f"{q3:.6g}", f"{spread:.3f}")
             note = ""
             if name in e2e and new is None and tag == "base":
-                if name == "setup_s":
-                    note = "exempt"
-                elif spread > m["bound"]:
+                if spread > m["bound"]:
                     note, bad = f"SPREAD>{m['bound']}", True
                 else:
                     note = f"ok (<= {m['bound']})"

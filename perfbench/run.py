@@ -35,6 +35,11 @@ HEAP = "3g"
 # 2.6-3.4 s under G1.
 JVM_GC = "-XX:+UseParallelGC"
 
+# C1 only. With C2, corpus_dedup run medians on one seed differed by 1.6x
+# from one JVM to the next, and ops kept getting faster for the whole
+# window. C1 code is slower, but it reaches its speed within a few ops.
+JVM_JIT = "-XX:TieredStopAtLevel=1"
+
 ADD_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent",
@@ -162,15 +167,14 @@ def main():
     shutil.rmtree(run_root, ignore_errors=True)
     tmp = os.path.join(run_root, "tmp")
     os.makedirs(tmp)
-    k = min(4, os.cpu_count() or 1)
-    cmd = ["java", f"-Xmx{HEAP}", JVM_GC, f"-Djava.io.tmpdir={tmp}",
+    cmd = ["java", f"-Xmx{HEAP}", JVM_GC, JVM_JIT, f"-Djava.io.tmpdir={tmp}",
            f"-Dderby.system.home={tmp}", "-Dspark.ui.enabled=false"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd += ["-cp", classpath, "perfbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", args.trace,
-            "--root", os.path.join(run_root, "data"), "--cpus", str(k),
+            "--root", os.path.join(run_root, "data"),
             "--commit", commit_id()]
     if args.trace == "1":
         cmd += ["--spans", os.path.join(

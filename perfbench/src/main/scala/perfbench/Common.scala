@@ -18,9 +18,7 @@ object Catalog {
 
   val endToEnd: Seq[MetricDef] = Seq(
     lower("setup_s", "s"),
-    lower("op_s_p50", "s"),
-    lower("op_s_tail", "s"),
-    higher("items_per_s", "items/s"),
+    lower("op_cpu_s", "s"),
     lower("retained_heap_mb", "MB"))
 
   /** Spark counters the tracer charges to a span (see [[Counters]]). */
@@ -92,6 +90,7 @@ object Stats {
 /** What a run measured, filled in by the workload and the loop. */
 final class Recorder {
   val opSeconds = mutable.ArrayBuffer.empty[Double]
+  val cpuSeconds = mutable.ArrayBuffer.empty[Double]
   val opTraced = mutable.ArrayBuffer.empty[Boolean]
   val readSeconds = mutable.ArrayBuffer.empty[Double]
   var items = 0L
@@ -100,6 +99,18 @@ final class Recorder {
   def add(key: String, v: Double): Unit = sums(key) = sums.getOrElse(key, 0.0) + v
   def sum(key: String): Double = sums.getOrElse(key, 0.0)
   def set(key: String, v: Double): Unit = sums(key) = v
+
+  /** Times one op: appends its wall seconds to [[opSeconds]], and the CPU
+    * seconds every thread of the JVM spent over it (tasks, driver, GC) to
+    * [[cpuSeconds]]. */
+  def timeOp[T](body: => T): T = {
+    val c0 = Recorder.os.getProcessCpuTime
+    val t0 = System.nanoTime()
+    val r = body
+    opSeconds += (System.nanoTime() - t0) / 1e9
+    cpuSeconds += (Recorder.os.getProcessCpuTime - c0) / 1e9
+    r
+  }
 
   /** Plan-level scan counters of an executed read: (files read, rows the
     * scan produced) summed over its file-scan nodes. */
@@ -111,6 +122,9 @@ final class Recorder {
 }
 
 object Recorder {
+  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
   private object PlanWalk extends AdaptiveSparkPlanHelper {
     def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
       collect(p) { case s: FileSourceScanExec => s }
@@ -166,14 +180,11 @@ object Workload {
     }
   }
 
-  /** Closed-loop ingest timing shared by the two ingest workloads: the
-    * slice's source (transform chain, stats) then the strategy's write. */
-  def ingest(p: graft.pipeline.Processing, tr: Tracer)
-      : (graft.pipeline.ProcessingSummary, Double) = {
-    val t0 = System.nanoTime()
+  /** One slice, shared by the two ingest workloads: the slice's source
+    * (transform chain, stats), then the strategy's write. */
+  def ingest(p: graft.pipeline.Processing, tr: Tracer): graft.pipeline.ProcessingSummary = {
     tr.span("pipeline.source")(p.sliceStats)
-    val s = tr.span("pipeline.process")(p.process())
-    (s, (System.nanoTime() - t0) / 1e9)
+    tr.span("pipeline.process")(p.process())
   }
 
   /** Metadata for one ingest entity, rooted at `root`. */
@@ -184,17 +195,21 @@ object Workload {
       "connections": [ { "name": "bench" } ],
       "entities": [ $entityJson ] }""")
 
-  /** After an ingest op: resolve the new snapshot and read the commit's
-    * metrics from history. Adds the commit counters and bronze/silver
-    * bytes for write amplification; returns the table and its version. */
-  def afterCommit(spark: SparkSession, md: graft.metadata.Metadata,
-      e: graft.metadata.Entity, tr: Tracer, rec: Recorder,
-      sliceBytes: Long, logFilesBefore: Long)
-      : (graft.tables.ManagedTable, graft.tables.Manifest) = {
-    val (table, m) = tr.span("tables.snapshot") {
+  /** The silver table's current snapshot, resolved on a fresh handle. */
+  def snapshot(spark: SparkSession, md: graft.metadata.Metadata,
+      e: graft.metadata.Entity, tr: Tracer)
+      : (graft.tables.ManagedTable, graft.tables.Manifest) =
+    tr.span("tables.snapshot") {
       val t = graft.tables.ManagedTable.forLocation(spark, md.silverLocation(e))
       (t, t.manifest.get)
     }
+
+  /** After an ingest op and outside its timing: reads the commit's metrics
+    * from history and adds the commit counters, the live files and the
+    * bronze bytes for write amplification. */
+  def commitCounters(spark: SparkSession, md: graft.metadata.Metadata,
+      table: graft.tables.ManagedTable, m: graft.tables.Manifest, tr: Tracer,
+      rec: Recorder, sliceBytes: Long, logFilesBefore: Long): Unit = {
     val h = tr.span("tables.history")(table.history().head)
     rec.add("tables.commit.files_added", h.metrics.getOrElse("filesAdded", 0L).toDouble)
     rec.add("tables.commit.files_removed", h.metrics.getOrElse("filesRemoved", 0L).toDouble)
@@ -205,6 +220,5 @@ object Workload {
     rec.set("tables.live_files", m.files.size.toDouble)
     rec.add("log.files_written",
       (treeFiles(spark, s"${md.environment.rootFolder}/log") - logFilesBefore).toDouble)
-    (table, m)
   }
 }

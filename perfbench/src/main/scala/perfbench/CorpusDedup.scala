@@ -18,7 +18,7 @@ import graft.ops.{GraphOps, SubstrateCache, TextOps}
 final class CorpusDedup(root: String, seed: Long, scale: Double)(implicit spark: SparkSession)
     extends Workload {
 
-  val docs: Int = math.max(300, (5000 * scale).toInt)
+  val docs: Int = math.max(300, (1500 * scale).toInt)
   val tokensPerDoc = 80
   val vocabulary = 20000
   val nearDups: Int = docs / 10
@@ -57,26 +57,26 @@ final class CorpusDedup(root: String, seed: Long, scale: Double)(implicit spark:
 
   def runOp(op: Int, tr: Tracer, rec: Recorder): Seq[String] = {
     import spark.implicits._
-    val t0 = System.nanoTime()
-    // the operator persists its per-doc substrate; releasing it after the
-    // pass is the caller's part of the contract, and it keeps every pass
-    // computing from the parquet rather than from the previous pass
-    val (cand, handle) = SubstrateCache.scoped {
-      tr.span("ops.minhash") {
-        TextOps.minHashNearDupPairs(spark.read.parquet(corpus), "id", "text")
-          .select("id_a", "id_b", "inter", "uni").collect()
+    val (cand, pairs, groups) = rec.timeOp {
+      // the operator persists its per-doc substrate; releasing it after the
+      // pass is the caller's part of the contract, and it keeps every pass
+      // computing from the parquet rather than from the previous pass
+      val (cand, handle) = SubstrateCache.scoped {
+        tr.span("ops.minhash") {
+          TextOps.minHashNearDupPairs(spark.read.parquet(corpus), "id", "text")
+            .select("id_a", "id_b", "inter", "uni").collect()
+        }
       }
+      handle.release()
+      val pairs = cand.collect {
+        case r if 2L * r.getInt(2) >= r.getInt(3) => (r.getLong(0), r.getLong(1))
+      }.toSeq
+      val groups = tr.span("ops.groups") {
+        GraphOps.dedupGroups(pairs.toDF("id_a", "id_b"), "id_a", "id_b")
+          .select("doc_id", "group_id").collect()
+      }
+      (cand, pairs, groups)
     }
-    handle.release()
-    val pairs = cand.collect {
-      case r if 2L * r.getInt(2) >= r.getInt(3) => (r.getLong(0), r.getLong(1))
-    }.toSeq
-    val groups = tr.span("ops.groups") {
-      GraphOps.dedupGroups(pairs.toDF("id_a", "id_b"), "id_a", "id_b")
-        .select("doc_id", "group_id").collect()
-    }
-    val dt = (System.nanoTime() - t0) / 1e9
-    rec.opSeconds += dt
     rec.items += docs
     rec.add("candidates", cand.length)
     rec.add("verified", pairs.size)

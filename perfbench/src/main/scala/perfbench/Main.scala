@@ -12,9 +12,10 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *
   * {{{
   * perfbench.Main --workload cdc_merge --seed 1 --seconds 15 --trace 0
-  *   --root <scratch dir> [--cpus k] [--spans <file>] [--commit <id>]
+  *   --root <scratch dir> [--spans <file>] [--commit <id>]
   * }}}
   *
+  * k is min(4, nproc).
   * The last stdout line is the result: `correct`, `attempted`, `failed`
   * and `metrics` (end-to-end metrics untraced, per-layer metrics traced).
   * A human-readable report and a `PERFBENCH_DETAIL` JSON line go to
@@ -22,18 +23,27 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * correct. */
 object Main {
 
-  /** Warm-up runs at least this many ops, untimed, and continues until
-    * the JVM has been up for [[WarmUpMillis]]. In a fresh JVM the JIT
-    * keeps speeding these ops up for tens of seconds: a 60 s
-    * `corpus_dedup` loop went from 2.0 s per pass to a plateau of about
-    * 1.35 s after ~40 s, and with a fixed three-op warm-up run medians
-    * ranged from 1.4 to 2.7 s. Ending warm-up at a fixed JVM age puts
-    * every workload at a similar point on that curve. */
+  /** Warm-up runs at least [[MinWarmUpOps]] ops, untimed, and ends once
+    * op times level off: the last [[LevelOps]] ops lie within
+    * [[LevelSpread]] of each other. It ends at a JVM age of
+    * [[MaxWarmUpMillis]] whether or not they have levelled off, so a run
+    * stays within its time budget. */
   val MinWarmUpOps = 3
-  val WarmUpMillis = 30000L
+  val LevelOps = 3
+  val LevelSpread = 0.10
+  val MaxWarmUpMillis = 30000L
+
+  def levelled(xs: Seq[Double]): Boolean =
+    xs.size >= LevelOps && {
+      val last = xs.takeRight(LevelOps)
+      last.max <= last.min * (1 + LevelSpread)
+    }
+
+  /** Set-ups per run; their median is `setup_s`. */
+  val Setups = 3
 
   final case class Args(workload: String, seed: Long, seconds: Double,
-      trace: Boolean, root: String, cpus: Int, scale: Double, setups: Int,
+      trace: Boolean, root: String, cpus: Int, scale: Double,
       spans: Option[String], commit: String)
 
   def parse(argv: Array[String]): Args = {
@@ -41,11 +51,9 @@ object Main {
       k.drop(2) -> v }.toMap
     def need(k: String) = kv.getOrElse(k,
       throw new IllegalArgumentException(s"missing --$k"))
-    val nproc = Runtime.getRuntime.availableProcessors()
     Args(need("workload"), need("seed").toLong, need("seconds").toDouble,
       need("trace") == "1", need("root"),
-      kv.get("cpus").map(_.toInt).getOrElse(math.min(4, nproc)),
-      1.0, 3,
+      math.min(4, Runtime.getRuntime.availableProcessors()), 1.0,
       kv.get("spans"), kv.getOrElse("commit", "unknown"))
   }
 
@@ -118,7 +126,7 @@ object Main {
     // set up several times and keep the last; the median is setup_s
     val setupSeconds = mutable.ArrayBuffer.empty[Double]
     var w: Workload = null
-    (1 to a.setups).foreach { r =>
+    (1 to Setups).foreach { r =>
       if (r > 1) deleteTree(spark, s"${a.root}/setup${r - 1}")
       w = Workload(a.workload, spark, s"${a.root}/setup$r", a.seed, a.scale)
       val t0 = System.nanoTime()
@@ -143,10 +151,12 @@ object Main {
     }
     // warm-up ops are checked but not timed
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val warm = new Recorder
     var op = 1
-    while (failed == 0 && (op <= MinWarmUpOps || jvm.getUptime < WarmUpMillis)) {
+    while (failed == 0 && (op <= MinWarmUpOps ||
+        (!levelled(warm.opSeconds.toSeq) && jvm.getUptime < MaxWarmUpMillis))) {
       tracer.begin(op, traced = false)
-      attempt(op, new Recorder)
+      attempt(op, warm)
       op += 1
     }
     // the measured closed loop; with tracing, every other op is traced so
@@ -170,19 +180,17 @@ object Main {
     a.spans.foreach(p => tracer.writeJsonl(java.nio.file.Paths.get(p)))
 
     val ops = rec.opSeconds.toSeq
-    val (tailP, tailV, tailBeyond) = Stats.tail(ops)
+    val (tailP, _, tailBeyond) = Stats.tail(ops)
     val metrics: Seq[(String, Double)] =
       if (!a.trace) Seq(
         "setup_s" -> Stats.median(setupSeconds.toSeq),
-        "op_s_p50" -> Stats.median(ops),
-        "op_s_tail" -> tailV,
-        "items_per_s" -> (if (ops.isEmpty) 0.0 else rec.items / ops.sum),
+        "op_cpu_s" -> Stats.median(rec.cpuSeconds.toSeq),
         "retained_heap_mb" -> heapMb)
       else perLayer(tracer, rec)
     val units = (Catalog.endToEnd ++ Catalog.perLayer).map(m => m.name -> m.unit).toMap
     val correct = failed == 0
 
-    report(a, w, rec, setupSeconds.toSeq, heapMb, attempted, failed, (tailP, tailV, tailBeyond))
+    report(a, rec, setupSeconds.toSeq, heapMb, attempted, failed)
     def nums(xs: Seq[Double]) = JArray(xs.map(JDouble(_)).toList)
     def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
     val detail = JObject(
@@ -193,11 +201,13 @@ object Main {
       "heap_max_mb" -> JLong(Runtime.getRuntime.maxMemory() >> 20),
       "commit" -> JString(a.commit), "scale" -> JDouble(a.scale),
       "warmup_ops" -> JInt(firstMeasured - 1),
+      "warmup_samples" -> nums(warm.opSeconds.toSeq),
       "ops" -> JInt(ops.size),
       "op_tail_percentile" -> JDouble(tailP),
       "op_tail_samples_beyond" -> JInt(tailBeyond),
       "setup_samples" -> nums(setupSeconds.toSeq),
       "op_samples" -> nums(ops),
+      "op_cpu_samples" -> nums(rec.cpuSeconds.toSeq),
       "preflight_stray_jvms" -> strs(strays),
       "preflight_other_benchmarks" -> strs(benches),
       "facts" -> JObject(w.facts.map { case (k, v) => k -> JString(v) }: _*),
@@ -264,15 +274,17 @@ object Main {
 
   /** The run's figures under the names a reader of the workload expects,
     * each with its unit. */
-  def report(a: Args, w: Workload, rec: Recorder, setup: Seq[Double], heapMb: Double,
-      attempted: Int, failed: Int, tail: (Double, Double, Int)): Unit = {
+  def report(a: Args, rec: Recorder, setup: Seq[Double], heapMb: Double,
+      attempted: Int, failed: Int): Unit = {
     val ops = rec.opSeconds.toSeq
+    val (tailP, tailV, tailBeyond) = Stats.tail(ops)
     val ingest = a.workload != "corpus_dedup"
     val (op, items) = if (ingest) ("slice", "rows") else ("pass", "docs")
     val lines = mutable.ArrayBuffer(
       ("setup_s", Stats.median(setup), "s"),
+      (s"${op}_cpu_s", Stats.median(rec.cpuSeconds.toSeq), "s"),
       (s"${op}_s_p50", Stats.median(ops), "s"),
-      (f"${op}_s_tail (p${tail._1}%.1f, ${tail._3} beyond, n=${ops.size})", tail._2, "s"),
+      (f"${op}_s_tail (p$tailP%.1f, $tailBeyond beyond, n=${ops.size})", tailV, "s"),
       (s"${items}_per_s", if (ops.isEmpty) 0.0 else rec.items / ops.sum, s"$items/s"))
     if (a.workload == "cdc_merge") {
       val (p, v, beyond) = Stats.tail(rec.readSeconds.toSeq)

@@ -84,10 +84,10 @@ final class Scd2Snapshot(root: String, seed: Long, scale: Double)(implicit spark
     val (file, bytes) = writeSnapshot(op, keys)
 
     val logBefore = Workload.treeFiles(spark, s"$root/log")
-    val (summary, dt) = Workload.ingest(new Processing(md, entity, file), tr)
-    rec.opSeconds += dt
+    val summary = rec.timeOp(Workload.ingest(new Processing(md, entity, file), tr))
     rec.items += keys
-    Workload.afterCommit(spark, md, entity, tr, rec, bytes, logBefore)
+    val (table, m) = Workload.snapshot(spark, md, entity, tr)
+    Workload.commitCounters(spark, md, table, m, tr, rec, bytes, logBefore)
     Seq(
       ("recordsInSlice", summary.recordsInSlice, keys),
       ("inserted", summary.inserted, nInsert.toLong),

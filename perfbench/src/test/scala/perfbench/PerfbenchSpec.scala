@@ -73,7 +73,7 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = new java.io.ByteArrayOutputStream
     val code = Console.withOut(out) {
       Main.run(spark, Main.Args(name, 3, 0.2, trace,
-        tmp.resolve(s"run-$name-$trace").toString, 2, tiny, 3, None, "test"), Nil, Nil)
+        tmp.resolve(s"run-$name-$trace").toString, 2, tiny, None, "test"), Nil, Nil)
     }
     assert(code == 0)
     JsonMethods.parse(out.toString.trim.linesIterator.toSeq.last)
@@ -104,8 +104,8 @@ class PerfbenchSpec extends AnyFunSuite with BeforeAndAfterAll {
           assert((metrics(d.name) \ "unit") == JString(d.unit), d.name)
           assert((metrics(d.name) \ "value").isInstanceOf[JNumber], d.name)
         }
-        if (!trace) Seq("setup_s", "op_s_p50", "items_per_s", "retained_heap_mb")
-          .foreach(m => assert((metrics(m) \ "value").values.toString.toDouble > 0, m))
+        if (!trace) Catalog.endToEnd.foreach(m =>
+          assert((metrics(m.name) \ "value").values.toString.toDouble > 0, m.name))
       }
     }
   }

@@ -42,8 +42,8 @@ class CompareTest(unittest.TestCase):
     def test_cli_flags_regression_by_exit_code(self):
         with tempfile.TemporaryDirectory() as d:
             a, b = os.path.join(d, "a.jsonl"), os.path.join(d, "b.jsonl")
-            write_runs(a, "cdc_merge", "op_s_p50", "s", [1.0, 1.01, 0.99, 1.0])
-            write_runs(b, "cdc_merge", "op_s_p50", "s", [2.0, 2.01, 1.99, 2.0])
+            write_runs(a, "cdc_merge", "op_cpu_s", "s", [1.0, 1.01, 0.99, 1.0])
+            write_runs(b, "cdc_merge", "op_cpu_s", "s", [2.0, 2.01, 1.99, 2.0])
             tool = os.path.join(os.path.dirname(compare.__file__), "compare.py")
             same = subprocess.run([sys.executable, tool, a, a], capture_output=True, text=True)
             self.assertEqual(same.returncode, 0, same.stdout)
