@@ -195,7 +195,8 @@ object GraftFunctions {
     "graft_cosine" -> (es => CosineSimilarity(es(0), es(1))),
     "graft_lower_bound" -> (es => LowerBoundCount(es(0), es(1))),
     "graft_bpe_count" -> (es => BpeTokenCount(es(0), es(1))),
-    "graft_bpe_encode" -> (es => BpeEncode(es(0), es(1))))
+    "graft_bpe_encode" -> (es => BpeEncode(es(0), es(1))),
+    MinHashSketch.Name -> (es => MinHashSketch(es(0))))
 
   /** Idempotent per-session registration. */
   def register(spark: SparkSession): Unit =
@@ -203,6 +204,13 @@ object GraftFunctions {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
+
+  /** Registers `name` in `spark` unless it already resolves there. */
+  def ensure(spark: SparkSession, name: String): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, all.toMap.apply(name), "built-in")
+  }
 }
 
 /** `SparkSessionExtensions` installer — functions resolve in every session

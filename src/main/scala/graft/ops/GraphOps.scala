@@ -39,6 +39,12 @@ object GraphOps {
       case _ => ()
     }
 
+  /** Job description prefix of the propagation rounds' Spark jobs (the
+    * round number follows), so listeners can tell them apart from the
+    * edge materialization and from the caller's own jobs. The caller's
+    * description is restored on exit. */
+  val RoundJobDescription = "graft.connectedComponents round"
+
   /** Connected components of an undirected edge list.
     *
     * Returns one row per node that appears in `edges`:
@@ -101,7 +107,15 @@ object GraphOps {
       .select(col("__e.a").as("a"), col("__e.b").as("b"))
       .repartition(loopParts, col("b"))
       .dropDuplicates("a", "b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    val descWas = sc.getLocalProperty("spark.job.description")
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    // ONE finally from the persist on: the cached edges, the AQE toggle
+    // and the job description are released/restored on every exit path —
+    // a throw while materializing or mid-loop must not leave a
+    // corpus-scale edge frame pinned in the block manager
+    try {
+    sym.persist(StorageLevel.MEMORY_AND_DISK)
     sym.count() // materialize under AQE, BEFORE the toggle below
 
     // AQE off for the propagation rounds ONLY (restored on exit): every
@@ -113,9 +127,7 @@ object GraphOps {
     // with AQE, rounds+pairs-pipeline jobs without). Fewer jobs = less
     // per-job driver/listener overhead — the exact multiplier a long
     // service session pays on every propagation round.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
     // init: each node labeled with min(itself, its neighbors) — the first
     // propagation round fused into the node-list aggregation.
     // localCheckpoint is LAZY throughout: it caches partitions as the
@@ -133,6 +145,7 @@ object GraphOps {
     var converged = false
     var empty = false
     while (!converged && !empty && iter < maxIters) {
+      sc.setJobDescription(s"$RoundJobDescription $iter")
       // shuffle-hash, build = labels: both sides are already
       // hash-partitioned on the join key with the same partition count
       // (sym from its persisted repartition, labels from its aggregation),
@@ -186,7 +199,6 @@ object GraphOps {
       else converged = changed.getLong(0) == 0L
       iter += 1
     }
-    sym.unpersist()
     // the final frame's checkpoint blocks are released on BOTH abnormal
     // exits: nothing downstream will read them, and the throw path would
     // otherwise leave a corpus-scale label frame pinned in the session's
@@ -208,7 +220,11 @@ object GraphOps {
           "(component diameter exceeds the cap); raise maxIters")
     }
     labels.select("node", "component")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    } finally {
+      sym.unpersist()
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+      sc.setJobDescription(descWas)
+    }
   }
 
   /** Dedup groups from near-dup pairs: `(doc, group, is_canonical)` for

@@ -3,13 +3,20 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.MinHashSketch
+
 /** Text / dedup operators for large-scale training-data pipelines.
   *
-  * Everything here is pure Catalyst column algebra — no UDFs — so the hot
-  * path stays inside whole-stage codegen and scales linearly with
-  * executors. Pairwise work (near-dup detection) is always blocked by an
-  * LSH bucket key so the join is an equi-join on the bucket, never a cross
-  * join: at 100 TB the shuffle is O(docs × bands), not O(docs²).
+  * Everything here is Catalyst column algebra or a native codegen
+  * expression — no UDFs — so the hot path stays inside whole-stage
+  * codegen and scales linearly with executors. The MinHash substrate
+  * (shingle set + signature) is one such expression,
+  * [[graft.functions.MinHashSketch]]: a per-row loop with no shuffle,
+  * where the column-algebra form needed an explode, a doc-id shuffle, a
+  * window and an aggregate. Pairwise work (near-dup detection) is always
+  * blocked by an LSH bucket key so the join is an equi-join on the
+  * bucket, never a cross join: at 100 TB the shuffle is O(docs × bands),
+  * not O(docs²).
   *
   * All hash primitives are engine-portable (sha256-derived), so results
   * can be verified bit-for-bit against a SQL oracle.
@@ -42,7 +49,6 @@ object TextOps {
     354654323L, 1200956321L, 876543211L, 456789123L,
     91138289L, 1843267211L, 667894213L, 210987341L,
     1934567801L, 87654329L, 1345678917L, 543216789L)
-  def minHashK: Int = MinHashA.size
 
   /** LSH banding: 4 bands × 4 rows over the 16-signature. Collision
     * probability per band is J⁴ — selective enough that unrelated docs
@@ -62,44 +68,11 @@ object TextOps {
   /** Whitespace tokenization. */
   def tokens(text: Column): Column = split(text, "\\s+")
 
-  /** Word-bigram shingles: `w1_w2` strings. Empty for docs of <2 tokens
-    * (guarded — Spark's `sequence(1,0)` would descend). */
-  def bigramShingles(words: Column): Column =
-    when(size(words) < 2, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(words) - 1),
-        i => concat(element_at(words, i), lit("_"), element_at(words, i + 1))))
-
   /** Modulus keeping combined shingle hashes in 32-bit range. */
   val ShingleMod = 4294967296L
 
-  /** Numeric bigram-shingle hashes from per-word hashes: hash each word
-    * once, then combine adjacent pairs arithmetically — no per-shingle
-    * string building or re-hashing. `wordHashes` must be a bound column. */
-  def bigramShingleHashes(wordHashes: Column): Column =
-    when(size(wordHashes) < 2, array().cast("array<long>"))
-      .otherwise(transform(
-        sequence(lit(1), size(wordHashes) - 1),
-        i => pmod(element_at(wordHashes, i) * 1000003L
-          + element_at(wordHashes, i + 1), lit(ShingleMod))))
-
   /** Hashes of an array of strings (multiset, order preserved). */
   def hashAll(strings: Column): Column = transform(strings, portableHash(_))
-
-  /** MinHash signature over a column of hashes: array of k minima. */
-  def minHashSignature(hashes: Column): Column =
-    array(MinHashA.zip(MinHashB).map { case (a, b) =>
-      array_min(transform(hashes, h => pmod(lit(a) * h + lit(b), lit(MinHashPrime))))
-    }: _*)
-
-  /** LSH band keys from a signature: `Bands` strings, each concatenating
-    * `RowsPerBand` signature slots. Docs sharing any band key are
-    * near-dup candidates. */
-  def bandKeys(sig: Column): Column =
-    array((0 until Bands).map { j =>
-      concat_ws(":",
-        (0 until RowsPerBand).map(r => element_at(sig, j * RowsPerBand + r + 1)): _*)
-    }: _*)
 
   /** SimHash over a column of hashes (one per distinct token): for each bit
     * j, sum ±1 over tokens; bit set iff the sum is positive. */
@@ -125,56 +98,40 @@ object TextOps {
     df.groupBy(sha2(col(textCol), 256).as("content_sha"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_docs"))
 
-  /** MinHash+LSH near-duplicate candidate pairs with exact shingle-set
-    * Jaccard counts. Returns (id_a, id_b, inter, uni) for every pair of
-    * docs sharing at least one LSH band.
+  /** Per-doc MinHash sketch rows: `__id`, the `keep` columns, then the
+    * [[MinHashSketch]] fields as `__n` (shingle occurrences), `__hs`
+    * (sorted distinct shingle hashes) and `__m0..__m15` (signature
+    * slots). One row per input row with at least 2 tokens; shorter and
+    * null texts have no shingles and are dropped.
     *
-    * Plan shape: per-doc signature (narrow) → explode bands (×4) →
-    * self-equi-join on (band, key) → distinct pairs → re-join the two
-    * shingle sets → intersect counts. The only shuffles are the band join
-    * and the two id joins — all equi, all AQE-coalesced. */
-  /** Per-doc distinct shingle-hash sets — computed through EXPLODED rows,
-    * not per-row array lambdas: higher-order functions evaluate
-    * interpreted (CodegenFallback) and Catalyst's CollapseProject fuses
-    * staged projections back into nested lambdas, making sha-per-shingle
-    * O(tokens²) per row. Exploding instead keeps every step — tokenize,
-    * sha256 per word, adjacent-pair combine via `lead`, per-doc set — in
-    * whole-stage codegen, with linear work and two doc-id shuffles. This
-    * is also the shape that scales: (doc, shingle) rows hash-partition
-    * evenly across executors regardless of document length skew. */
-  /** Exploded (doc id, shingle hash) rows — the shared substrate for both
-    * the shingle-set aggregate and the MinHash signature aggregate. */
-  private def shingleRows(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = df.select(col(idCol).as("__id"),
-      posexplode(tokens(col(textCol))).as(Seq("__pos", "__w")))
-    val wh = tok.select(col("__id"), col("__pos"), portableHash(col("__w")).as("__h"))
-    val w = Window.partitionBy("__id").orderBy("__pos")
-    wh.withColumn("__h2", lead("__h", 1).over(w))
-      .filter(col("__h2").isNotNull)
-      .select(col("__id"),
-        pmod(col("__h") * 1000003L + col("__h2"), lit(ShingleMod)).as("__s"))
-  }
+    * The sketch is ONE per-row native expression, so the whole substrate
+    * is a narrow, whole-stage-codegen projection of the input: no
+    * exchange, no sort, no window, no aggregate. The column-algebra form
+    * it replaced exploded every word to a row, hashed it through a hex
+    * string, shuffled the (doc, word) rows on the doc id, paired them
+    * with `lead` and rebuilt each doc with a non-codegen `collect_set`
+    * aggregate — half of a near-dup pass's CPU, and a shuffle whose width
+    * was pinned to the core count. (Array lambdas were no alternative:
+    * they evaluate interpreted and re-split the text per element.)
+    *
+    * The sketch goes through `inline(array(...))` so that the
+    * drop-empty filter sits above a Generate: a filter directly over the
+    * projected sketch would be pushed below it and evaluate the sketch a
+    * second time. */
+  private def sketchRows(df: DataFrame, idCol: String, textCol: String,
+      keep: Column*): DataFrame =
+    df.select((col(idCol).as("__id") +: keep) :+
+        inline(array(MinHashSketch.column(df.sparkSession, col(textCol)))): _*)
+      .filter(col("hs").isNotNull)
+      .withColumnsRenamed(
+        MinHashSketch.ResultType.fieldNames.map(f => f -> s"__$f").toMap)
 
-  private def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    shingleRows(df, idCol, textCol)
-      .groupBy("__id").agg(collect_set(col("__s")).as("__hs"))
-
-  /** Per-doc MinHash substrate: distinct shingle set + all k signature
-    * slots in ONE hash-aggregate — min over the exploded rows equals min
-    * over the distinct set, and `min(pmod(...))` stays in whole-stage
-    * codegen — no interpreted array lambdas anywhere on the hot path, so
-    * a cache eviction re-derives the signatures at full codegen speed.
-    * Persisted: band joins + set re-joins reuse it several times; the
+  /** Per-doc MinHash substrate: `__id`, `__hs`, `__m0..__m15`. Persisted
+    * by default: band joins + set re-joins reuse it several times; the
     * cached form is (id, long[], 16 longs) — a few MB per million docs. */
   private def docSignatures(df: DataFrame, idCol: String, textCol: String,
       cache: Boolean = true): DataFrame = {
-    val sigAggs = MinHashA.zip(MinHashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("__s") * a + b, lit(MinHashPrime))).as(s"__m$i")
-    }
-    val out = shingleRows(df, idCol, textCol)
-      .groupBy("__id")
-      .agg(collect_set(col("__s")).as("__hs"), sigAggs: _*)
+    val out = sketchRows(df, idCol, textCol).drop("__n")
     if (cache) SubstrateCache.persist(out)
     else out
   }
@@ -200,6 +157,15 @@ object TextOps {
     docs.select(col("__id"), posexplode(bandStructs).as(Seq("__pos", "__key")))
   }
 
+  /** MinHash+LSH near-duplicate candidate pairs with exact shingle-set
+    * Jaccard counts. Returns (id_a, id_b, inter, uni) for every pair of
+    * docs sharing at least one LSH band.
+    *
+    * Plan shape: per-doc sketch (narrow, persisted) → explode bands (×4)
+    * → self-equi-join on (band, key) → distinct pairs → re-join the two
+    * shingle sets → intersect counts. The only shuffles are the band join
+    * and the two id joins — all equi, all AQE-coalesced. Needs no
+    * function registration. */
   def minHashNearDupPairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val docs = docSignatures(df, idCol, textCol)
     val bands = bandRows(docs)
@@ -328,24 +294,22 @@ object TextOps {
     * and spam: how much of a document is repeated content. Per doc:
     * total bigram occurrences, distinct bigrams, and the repeated
     * fraction `1 - distinct/total` (0.0 for docs with < 2 tokens — nothing
-    * to repeat). One exploded stream and one count/count-distinct
-    * aggregate; linear in corpus tokens.
+    * to repeat). A narrow projection of the [[MinHashSketch]] counts; no
+    * shuffle, linear in corpus tokens.
     *
-    * Output: (doc_id, n_bigrams, n_distinct, repetition). */
+    * Output: (doc_id, n_bigrams, n_distinct, repetition), one row per
+    * input row. */
   def repetitionMetrics(
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val counts = shingleRows(df, idCol, textCol)
-      .groupBy("__id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        count_distinct(col("__s")).as("n_distinct"))
-      .withColumnRenamed("__id", "doc_id")
-    df.select(col(idCol).as("doc_id"))
-      .join(counts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-        coalesce(lit(1.0) - col("n_distinct").cast("double")
-          / col("n_bigrams").cast("double"), lit(0.0)).as("repetition"))
+    val sk = col("__sk")
+    val total = coalesce(sk("n"), lit(0L))
+    val distinct = when(sk.isNull, lit(0L)).otherwise(size(sk("hs")).cast("long"))
+    df.select(col(idCol).as("doc_id"),
+        MinHashSketch.column(df.sparkSession, col(textCol)).as("__sk"))
+      .select(col("doc_id"), total.as("n_bigrams"), distinct.as("n_distinct"),
+        when(sk.isNull, lit(0.0))
+          .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
+          .as("repetition"))
   }
 
   /** Deterministic sequence packing: assign docs to token-budget bins for
@@ -440,12 +404,12 @@ object TextOps {
     * primitive. */
   def blockedJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: Column): DataFrame = {
-    // persisted for the same reason as minHashNearDupPairs: the
-    // self-join would recompute the interpreted sha256 lambdas per side.
-    // Registered with SubstrateCache so the session can release it.
+    // persisted for the same reason as minHashNearDupPairs: both sides of
+    // the self-join read it. Registered with SubstrateCache so the session
+    // can release it.
     val docs = SubstrateCache.persist(
-      shingleSets(df, idCol, textCol)
-        .join(df.select(col(idCol).as("__id"), blockCol.as("__blk")), "__id"))
+      sketchRows(df, idCol, textCol, blockCol.as("__blk"))
+        .select("__id", "__blk", "__hs"))
     docs.alias("a").join(docs.alias("b"),
         col("a.__blk") === col("b.__blk") && col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
@@ -959,13 +923,12 @@ object TextOps {
     * discovery tool for boilerplate phrases, contamination templates, and
     * per-source tics worth scrubbing before training.
     *
-    * Plan shape: EXPLODED rows + `lead` per document, NOT the
-    * `bigramShingles` array HOF — higher-order functions evaluate
-    * interpreted and CollapseProject fuses the tokenizer into each
-    * element lambda, re-splitting the text per token (O(tokens²) per doc;
-    * measured 7× slower end-to-end at sf0.1 — same trap `shingleRows`
-    * documents). Everything here stays in whole-stage codegen: tokenize
-    * once, adjacent-pair via `lead` over (doc, pos), one (group, ngram)
+    * Plan shape: EXPLODED rows + `lead` per document, NOT an array HOF
+    * over the words — higher-order functions evaluate interpreted and
+    * CollapseProject fuses the tokenizer into each element lambda,
+    * re-splitting the text per token (O(tokens²) per doc; measured 7×
+    * slower end-to-end at sf0.1). Everything here stays in whole-stage
+    * codegen: tokenize once, adjacent-pair via `lead` over (doc, pos), one (group, ngram)
     * hash aggregate, then the rank-limit window — which Spark rewrites
     * into a partial WindowGroupLimit per input split, so a dominant group
     * never funnels its full n-gram census through one reducer. */
@@ -1424,11 +1387,12 @@ object TextOps {
         count_distinct(col("lang")).as("n_langs"),
         (sum("toks") / count(lit(1))).as("mean_tokens"))
 
-  /** Rolling word n-gram hashes (generalizes [[bigramShingleHashes]],
-    * identical to it for n=2): position i carries the polynomial fold of
-    * word hashes i..i+n-1, `acc → (acc*1000003 + h) mod 2³²`. Each fold
-    * step's product stays under 2⁵² — no signed-64 overflow. Empty for
-    * docs shorter than n words. */
+  /** Rolling word n-gram hashes (for n=2, the shingles
+    * [[graft.functions.MinHashSketch]] folds): position i carries the
+    * polynomial fold of word hashes i..i+n-1,
+    * `acc → (acc*1000003 + h) mod 2³²`. Each fold step's product stays
+    * under 2⁵² — no signed-64 overflow. Empty for docs shorter than n
+    * words. */
   def ngramHashes(wordHashes: Column, n: Int,
       mult: Long = 1000003L): Column = {
     require(n >= 2, s"n-gram length must be >= 2, got $n")
@@ -1825,9 +1789,9 @@ object TextOps {
   /** (doc, position, word-hash) rows for one corpus — the shared
     * tokenize-and-hash substrate under [[dsirScores]],
     * [[classifierScores]], and [[lmPerplexityScores]]. Exploded rows,
-    * not per-row array lambdas — the same reasoning as [[shingleRows]]:
-    * sha-per-word stays in whole-stage codegen and linear (an
-    * array-lambda pipeline re-evaluates the inner hash transform per
+    * not per-row array lambdas (which evaluate interpreted and re-split
+    * the text per element): sha-per-word stays in whole-stage codegen
+    * and linear (an array-lambda pipeline re-evaluates the inner hash transform per
     * element_at), and (doc, position) rows hash-partition evenly
     * regardless of document-length skew. Persisted via [[SubstrateCache]]
     * (both the unigram and the bigram branch read it). */

@@ -25,8 +25,8 @@ object TrainingOps {
   private val Words = raw"string_split_regex(text, '\s+')"
 
   /** DuckDB: distinct word-bigram shingle HASHES per doc (CTE body) —
-    * mirrors `array_distinct(bigramShingleHashes(hashAll(tokens(...))))`:
-    * words hashed once, adjacent pairs combined arithmetically. */
+    * mirrors the `hs` set of `graft.functions.MinHashSketch`: words
+    * hashed once, adjacent pairs combined arithmetically. */
   private val ShingleDocs =
     s"""SELECT doc_id AS id,
        |  list_distinct(CASE WHEN len(hw) < 2 THEN CAST([] AS BIGINT[])

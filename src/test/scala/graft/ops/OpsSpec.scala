@@ -686,25 +686,62 @@ class OpsSpec extends AnyFunSuite with Matchers {
     val sc = spark.sparkContext
     // path 0-1-2-3: init (fused) labels {0:0,1:0,2:1,3:2}; round 1 fixes
     // 2 and 3 partially, round 2 fixes 3, round 3 observes zero changes —
-    // 3 round actions, each ONE job with AQE off, plus the edge-frame
-    // materialization (one count under AQE = up to 4 stage-wrapper jobs;
-    // deliberately run with AQE ON so the upstream pair pipeline keeps
-    // coalescing/skew handling — the r16 lesson: lazily materializing it
-    // inside the AQE-off window regressed q_td_dedup_best 3.6→12.6 s)
+    // 3 round actions, each ONE job with AQE off. The edge-frame
+    // materialization runs before them, deliberately with AQE ON so the
+    // upstream pair pipeline keeps coalescing/skew handling (the r16
+    // lesson: lazily materializing it inside the AQE-off window regressed
+    // q_td_dedup_best 3.6→12.6 s); AQE wraps its query stages in jobs of
+    // their own, so it is counted apart from the rounds. The rounds carry
+    // GraphOps.RoundJobDescription, which tells the two kinds apart.
     val path = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("x", "y")
-    // AQE stays ON here: connectedComponents owns the toggle now (AQE-on
+    // AQE stays ON here: connectedComponents owns the toggle (AQE-on
     // ROUNDS would wrap each round's query stages in extra jobs —
     // measured 18→7 jobs on q_td_dedup_groups) and must restore the
     // session's setting on exit
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          p.getProperty("spark.jobGroup.id") match {
+            case "graft-cc-jobcount" =>
+              descs.add(String.valueOf(p.getProperty("spark.job.description")))
+            case "graft-cc-drained" => drained.countDown()
+            case _ => ()
+          }
+        }
+    }
+    sc.addSparkListener(listener)
     sc.setJobGroup("graft-cc-jobcount", "cc per-round job-count lock")
     val out =
-      try GraphOps.connectedComponents(path, "x", "y")
-      finally sc.clearJobGroup()
+      try {
+        val cc = GraphOps.connectedComponents(path, "x", "y")
+        // the caller's job description survives the labelled rounds
+        sc.getLocalProperty("spark.job.description") shouldBe
+          "cc per-round job-count lock"
+        cc
+      } finally sc.clearJobGroup()
     spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
-    val jobs = sc.statusTracker.getJobIdsForGroup("graft-cc-jobcount").length
-    // 3 round jobs + ≤4 materialization jobs; AQE-on rounds would be ≥11
-    jobs should be <= 7
+    // the listener bus delivers in order but asynchronously: once a marker
+    // job started after the call is seen, every job of the call has been
+    try {
+      sc.setJobGroup("graft-cc-drained", "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      drained.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val jobs = descs.asScala.toSeq
+    val rounds = jobs.count(_.startsWith(GraphOps.RoundJobDescription))
+    val materialize = jobs.count(_ == "cc per-round job-count lock")
+    withClue(s"job descriptions: ${jobs.sorted.mkString(" | ")}\n") {
+      rounds shouldBe 3
+      // AQE runs the count as: the repartition's shuffle stage, the cache
+      // build, the count's shuffle stage, the result stage — one job each
+      materialize shouldBe 4
+      jobs.size shouldBe rounds + materialize
+    }
     out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L)
   }

@@ -41,6 +41,24 @@ class PlanShapeSpec extends AnyFunSuite with Matchers {
     p should include("Join")
   }
 
+  test("minhash substrate is one narrow pass: no window, no posexplode, " +
+      "no exchange under the cached sketch relation") {
+    val df = graft.ops.TextOps.minHashNearDupPairs(docs, "doc_id", "text")
+    val cached = df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.cachedPlan.toString
+    }.distinct
+    cached should have size 1
+    val substrate = cached.head
+    substrate should include("graft_minhash_sketch")
+    substrate should not include "Window"
+    substrate should not include "posexplode"
+    substrate should not include "Exchange"
+    // the sketch is computed once per row: the drop-empty filter sits
+    // above the Generate, not pushed below it as a second evaluation
+    "graft_minhash_sketch\\(".r.findAllIn(substrate).size shouldBe 1
+  }
+
   test("dedup index probe: batch side broadcasts, corpus side never " +
       "shuffles into the band join") {
     val root = java.nio.file.Files.createTempDirectory("graft-psidx").toString
