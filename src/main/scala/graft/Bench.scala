@@ -1,5 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{
+  SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
 object Bench {
   /** One query's measurements: the recorded floor (min of successful reps,
     * -1.0 if every rep failed), every rep's wall time, and the first
@@ -7,40 +13,36 @@ object Bench {
   final case class BenchResult(
       name: String, floor: Double, reps: Seq[Double], err: Option[String])
 
+  /** The `SPARK_GRAFT_BENCH_JOBS=1` listener: running job and stage
+    * totals for the per-rep `JOBS` line, plus one stderr line per
+    * finished job — `JOB <query> rep<r> job=<id> stages=<n> ms=<run
+    * time> site=<call site>` — so a slow rep shows which action took
+    * the time. */
+  private final class JobTimeline extends SparkListener {
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    @volatile var label = ""
+    // job id -> (query label, start nanos, stage count, call site)
+    private val started =
+      new ConcurrentHashMap[Int, (String, Long, Int, String)]
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
+      // a job's result stage (its last) is named by the job's call site
+      val site =
+        if (j.stageInfos.isEmpty) "" else j.stageInfos.maxBy(_.stageId).name
+      started.put(j.jobId, (label, System.nanoTime(), j.stageInfos.size, site))
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      Option(started.remove(j.jobId)).foreach { case (q, t0, n, site) =>
+        System.err.println(f"JOB $q job=${j.jobId}%d stages=$n%d " +
+          f"ms=${(System.nanoTime() - t0) / 1e6}%.0f site=$site")
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the in-memory status stores (AppStatusListener + SQL listener run
-      // even with the UI off) retain up to 100k task rows + 1000
-      // executions by default — across ~100 queries × 3 reps that is
-      // hundreds of MB of old-gen listener state and per-event CPU,
-      // which inflates every LATER query's floor (r11: q_w_sessions
-      // 5.25 s official vs 0.51 s isolated). The bench reads nothing
-      // from them; keep only a diagnostic sliver.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.ui.retainedDeadExecutors", "5")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.appStateStore.asyncTracking.enable", "true")
-      // local-mode harness choice: the checksummed LocalFileSystem forks
-      // an external process per getFileStatus AND shadows every file
-      // with a .crc twin — pure overhead on a local benchmark (a real
-      // deployment reads HDFS/S3, where this config is moot)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // graft_* SQL functions + SQL DML (MERGE/UPDATE/DELETE) rule
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies session confs
     // before any query runs — lets a floors campaign toggle engine
     // features (e.g. spark.graft.write.rebalance) without recompiling
@@ -123,19 +125,13 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // JOBS=1: per-query job/stage counts on stderr — job-count bloat (many
-    // tiny actions) is invisible in wall-clock-only output
+    // JOBS=1: per-query job/stage counts and a per-job timeline on
+    // stderr — job-count bloat (many tiny actions) is invisible in
+    // wall-clock-only output
     val jobCounter =
       if (!sys.env.get("SPARK_GRAFT_BENCH_JOBS").contains("1")) None
       else {
-        val c = new org.apache.spark.scheduler.SparkListener {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger
-          val stages = new java.util.concurrent.atomic.AtomicInteger
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-          }
-        }
+        val c = new JobTimeline
         spark.sparkContext.addSparkListener(c)
         Some(c)
       }
@@ -144,6 +140,7 @@ object Bench {
       .map { case (name, fn) =>
         var err: Option[String] = None
         val allReps = (1 to reps).map { r =>
+          jobCounter.foreach(_.label = s"$name rep$r")
           val j0 = jobCounter.map(c => (c.jobs.get, c.stages.get))
           val t0 = System.nanoTime()
           // a failed query is reported as failed ("err" below), never as a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` of declared queries to files.
   *
   * Usage: `PlanDump <sfDir> <outDir> [q1,q2,...]` (default: all queries).
@@ -17,19 +15,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     try graft.queries.EngineOps.warmStaging(spark, sfDir)
     catch { case _: Throwable => () }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,24 +13,8 @@ object Verify {
         (n: String) => pats.exists(n.contains)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, convert in Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write µs (not INT96) so the driver's reader sees the same values DuckDB emits
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same local-FS choice as Bench: no fork-per-stat, no .crc twins
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // graft_* SQL functions + SQL DML (MERGE/UPDATE/DELETE) rule
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

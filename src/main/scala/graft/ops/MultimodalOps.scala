@@ -85,11 +85,6 @@ object MultimodalOps {
     }
   }
 
-  /** Backwards-compatible aliases for the default stub. */
-  def decodeStub(payload: Array[Byte]): MediaMeta = StubDecoder.decode(payload)
-  def featureStub(payload: Array[Byte], dims: Int = 8): Array[Float] =
-    StubDecoder.features(payload, dims)
-
   /** Pack a text column as a binary payload with populated metadata —
     * the ingest-side shape (in production the payload arrives as raw
     * bytes from the object store). */

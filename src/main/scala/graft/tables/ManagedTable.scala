@@ -1531,15 +1531,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     readFilesWithTag(m, m.files, Some(tagCol))
   }
 
-  /** A/B escape hatch for the manifest-backed scan: set
-    * `spark.graft.manifestScan.enabled=false` to route every table read
-    * through the classic `spark.read.parquet(paths)` DataFrameReader
-    * (per-path driver stats + >32-path listing jobs). Exists so the two
-    * read substrates can be benchmarked against each other in one
-    * session with no recompile. */
-  private def manifestScanEnabled: Boolean =
-    spark.conf.get("spark.graft.manifestScan.enabled", "true").toBoolean
-
   /** Manifest-backed parquet frame over `files` — the relation is built
     * from the manifest's (path, size) entries with ZERO filesystem round
     * trips at plan time (see [[org.apache.spark.sql.GraftManifestScan]]);
@@ -1547,10 +1538,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * getFileStatus each. */
   private def manifestScan(schema: org.apache.spark.sql.types.StructType,
       files: Seq[TableFile]): DataFrame =
-    if (!manifestScanEnabled)
-      spark.read.schema(schema)
-        .parquet(files.map(f => new Path(root, f.path).toString): _*)
-    else org.apache.spark.sql.GraftManifestScan.parquet(spark, schema,
+    org.apache.spark.sql.GraftManifestScan.parquet(spark, schema,
       fs.makeQualified(root),
       files.map { f =>
         val p = fs.makeQualified(new Path(root, f.path))
@@ -1589,22 +1577,17 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       pos.fold(t)(p => t.withColumn(p, col("_metadata.row_index")))
     }
     // a convert-adopted table's imported files carry partition values
-    // only in their hive directory names — scan those with partition
-    // discovery rooted at the table (engine-written files, always under
-    // data/, store every column in the data and read plainly)
+    // only in their hive directory names (engine-written files, always
+    // under data/, store every column in the data and read plainly).
+    // Files BORROWED by a shallow clone of a converted table (absolute
+    // URIs under the source's root) are adopted files too: their
+    // partition values come from the manifest the same way, so no
+    // directory layout or common root is needed.
     val hiveDirs = m.properties
       .get(ManagedTable.ConvertPartitionDirsProp).contains("true")
-    val (adopted0, plain) =
+    val (adopted, plain) =
       if (hiveDirs) clean.partition(f => !f.path.startsWith("data/"))
       else (Nil, clean)
-    // BORROWED adopted files (absolute URIs — this table is a shallow
-    // clone of a converted table) cannot go through partition discovery:
-    // `basePath` must be an ancestor of every file, and these live under
-    // the SOURCE's root. Scan them plainly and attach partition values
-    // from the manifest via a broadcast file→values lookup instead — one
-    // scan however many partitions, no dependence on directory layout.
-    val (borrowed, adopted) = adopted0.partition(f =>
-      new Path(f.path).isAbsolute)
     val cleanParts = Seq(
       if (plain.isEmpty) None
       // manifest-backed scan: the manifest already records every path AND
@@ -1615,18 +1598,11 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       // table).
       else Some(withTag(manifestScan(scanSchema, plain))),
       if (adopted.isEmpty) None
-      else if (!manifestScanEnabled) Some(withTag(
-        spark.read.schema(scanSchema)
-          .option("basePath", root.toString)
-          .parquet(adopted.map(f => new Path(root, f.path).toString): _*)
-          // discovery may order partition columns after data columns —
-          // normalize to the manifest schema before tagging
-          .select(scanSchema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)))
       else Some(withTag {
-        // adopted hive layouts keep partition values in directory names,
-        // not the data files — the manifest records them per file, so the
-        // relation is built with them directly (same cast semantics as
-        // partition discovery, zero listing/stat round trips)
+        // the manifest records each adopted file's partition value
+        // strings, so the relation is built with them directly (same
+        // cast semantics as partition discovery, the hive null sentinel
+        // reads as null, zero listing/stat round trips)
         val partPhys = m.partitionColumns.map(m.physicalName)
         val (partFields, dataFields) =
           scanSchema.fields.partition(f => partPhys.contains(f.name))
@@ -1646,9 +1622,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           // partition columns surface appended — normalize to the
           // manifest schema order before tagging
           .select(scanSchema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
-      }),
-      if (borrowed.isEmpty) None
-      else Some(readBorrowedAdopted(m, borrowed, withTag, matNulls = matCols))
+      })
     ).flatten
     val cleanDf =
       if (cleanParts.isEmpty && dvd.isEmpty) {
@@ -1680,7 +1654,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       // (rewrites), else the manifest entry (baseRowId + physical row
       // index / dataVersion) — via a broadcast (uri → entry) lookup over
       // every URI rendering the file source might emit (same alias set
-      // as fileUriLookup / readBorrowedAdopted)
+      // as fileUriLookup)
       import org.apache.spark.sql.types.StringType
       val uriC = "__g_rt_uri"; val baseC = "__g_rt_base"; val dvC = "__g_rt_dv"
       val lookupRows = files.flatMap { f =>
@@ -1721,54 +1695,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         (if (tagReq.isEmpty) tag.toSeq else Nil) ++
         (if (posReq.isEmpty) pos.toSeq else Nil): _*)
     }
-  }
-
-  /** Scan adopted hive-layout files BORROWED from another table's root
-    * (absolute manifest URIs — this table shallow-cloned a converted
-    * source): one plain parquet scan of the data columns, partition
-    * values attached by a broadcast join against the manifest's
-    * file→values map and cast to the schema's partition types. Scales as
-    * one scan + one broadcast however many partitions; layout-agnostic. */
-  private def readBorrowedAdopted(m: Manifest, borrowed: Seq[TableFile],
-      withTag: DataFrame => DataFrame,
-      matNulls: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val partPhys = m.partitionColumns.map(m.physicalName)
-    val dataSchema = StructType(
-      m.physicalSchema.fields.filterNot(f => partPhys.contains(f.name)))
-    val uriCol = "__g_borrow_uri"
-    val scan = withTag(spark.read.schema(dataSchema)
-      .parquet(borrowed.map(f => new Path(root, f.path).toString): _*)
-      .withColumn(uriCol, col("_metadata.file_path")))
-    // every URI rendering the file source might emit, mapped to the
-    // file's partition values (same alias set as fileUriLookup)
-    val keyCol = "__g_borrow_key"
-    val pvCols = partPhys.map(c => s"__g_pv_$c")
-    val lookupRows = borrowed.flatMap { f =>
-      val p = fs.makeQualified(new Path(root, f.path))
-      Set(p.toString, p.toUri.toString, p.toUri.getPath, p.toUri.toASCIIString)
-        .toSeq.map(u => org.apache.spark.sql.Row.fromSeq(
-          u +: m.partitionColumns.map(c => f.partitionValues.getOrElse(c, null))))
-    }
-    val lookupSchema = StructType(StructField(keyCol, StringType) +:
-      pvCols.map(StructField(_, StringType)))
-    val lookup = spark.createDataFrame(
-      spark.sparkContext.parallelize(lookupRows, 1), lookupSchema)
-    val joined = scan.join(broadcast(lookup),
-      scan(uriCol) === lookup(keyCol), "left")
-    val typed = m.physicalSchema.fields.toSeq.map { fld =>
-      if (partPhys.contains(fld.name))
-        col(s"`__g_pv_${fld.name}`").cast(fld.dataType).as(fld.name)
-      else col(s"`${fld.name}`")
-    }
-    val extras = scan.columns.toSeq
-      .filterNot(c => c == uriCol || dataSchema.fieldNames.contains(c))
-      .map(c => col(s"`$c`")) // tag/pos columns added by withTag
-    // borrowed files are externally written — never a materialized
-    // row-ID/commit-version column; emit null slots
-    // union-position-compatibly
-    val mat = matNulls.map(c => lit(null).cast("long").as(c))
-    joined.select(typed ++ mat ++ extras: _*)
   }
 
   /** Scan `files` (all carrying a DV) with their masked positions
@@ -1998,8 +1924,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     // the converted marker is ALWAYS set (it gates vacuum's
     // adopted-orphan sweep — unpartitioned adopted files live outside
     // data/ too and would otherwise leak forever once DML drops them);
-    // the partition-dirs property additionally drives discovery reads
-    // and stays keyed on a hive layout actually existing
+    // the partition-dirs property additionally drives manifest-valued
+    // partition reads and stays keyed on a hive layout actually existing
     val props = Map(ManagedTable.ConvertedTableProp -> "true") ++
       (if (partitionCols.isEmpty) Map.empty[String, String]
        else Map(ManagedTable.ConvertPartitionDirsProp -> "true"))
@@ -2572,10 +2498,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * always are; an adopted lake with colliding names falls back to the
     * classic rewrite). */
   private[tables] def dvEligible(m: Manifest): Boolean = {
-    // adopted hive-layout files read partition values from their DIR
-    // names via discovery — the DV-masked scan path cannot attach those,
-    // so converted tables keep the classic rewrite until compaction
-    // normalizes their layout
+    // adopted hive-layout files lack their partition columns in the
+    // data — the DV-masked scan path does not attach the manifest's
+    // partition values, so converted tables keep the classic rewrite
+    // until compaction normalizes their layout
     if (m.properties.get(ManagedTable.ConvertPartitionDirsProp)
         .contains("true") &&
         m.files.exists(f => !f.path.startsWith("data/"))) return false
@@ -3990,8 +3916,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * table's snapshot at `destPath` — data files (and deletion-vector
     * sidecars) are byte-copied REL-PATH-PRESERVING, so stats, DV masks,
     * column-mapping physical names, and even a converted table's adopted
-    * hive layout (plus the property that drives its partition-discovery
-    * reads) all stay valid without re-encoding a single row group. Copies
+    * hive layout (plus the property that drives its manifest-valued
+    * partition reads) all stay valid without re-encoding a single row group. Copies
     * fan out as an executor job above
     * `spark.graft.clone.distributedThreshold` files (default 64): on an
     * object store a 100 TB clone is a massively-parallel server-side
@@ -5507,8 +5433,8 @@ object ManagedTable {
     * directory ([[ManagedTable.convertInPlace]]): its imported files
     * carry partition values only in their DIRECTORY names (engine-written
     * files always store them in the data too), so snapshot reads
-    * materialize them via partition discovery and deletion vectors stay
-    * disabled (the DV scan cannot attach directory values). */
+    * attach them from the manifest's per-file partition values and
+    * deletion vectors stay disabled (the DV scan does not attach them). */
   val ConvertPartitionDirsProp = "graft.convert.partitionDirs"
 
   /** Permanent marker on every [[ManagedTable.convertInPlace]] table

@@ -36,7 +36,20 @@ import org.apache.spark.sql.types.StructType
   * (`InMemoryFileIndex` gets this via its rootPaths-set equality; a
   * fresh index instance per read is the norm, identity equality is
   * not). Entry-level equality is also exactly version-safe: reads of
-  * different snapshots differ in their file lists and stay unequal. */
+  * different snapshots differ in their file lists and stay unequal.
+  *
+  * Immutable-file assumption: equality never looks at file contents or
+  * modification times, so it is sound only because a manifest path names
+  * bytes that never change. Engine commits write fresh, uniquely named
+  * files and maintenance replaces manifest entries rather than
+  * overwriting files; adopted (converted) files are read where they sit
+  * and never written. A file rewritten in place at the same path and size
+  * would compare equal to its old self, and exchange reuse or the
+  * CacheManager's `sameResult` lookup could serve the old rows.
+  *
+  * `tableRoot` only feeds `rootPaths` (plan display): files need not lie
+  * under it — a shallow clone's borrowed entries are absolute URIs under
+  * the source table's root. */
 object GraftManifestScan {
 
   /** Bind partition-only predicates against `partSchema` and keep the
@@ -142,7 +155,8 @@ object GraftManifestScan {
     * partition DISCOVERY (same `Cast(string, type)` the discovery path
     * applies, same appended-partition-column output order, same
     * partition pruning against partition-only predicates) minus the
-    * listing/stat round trips. `files` = (qualified path, size, partition
+    * listing/stat round trips, and without discovery's need for one
+    * common base directory. `files` = (qualified path, size, partition
     * value strings aligned with `partitionSchema`; null or the hive
     * default-partition sentinel read as null). */
   def parquetPartitioned(spark: SparkSession, dataSchema: StructType,

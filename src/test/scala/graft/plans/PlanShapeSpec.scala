@@ -116,6 +116,56 @@ class PlanShapeSpec extends AnyFunSuite with Matchers {
     filtered.count() shouldBe 10
   }
 
+  test("one read path: every table-data relation is a manifest scan — " +
+      "plain, converted, shallow clone of converted, deletion vectors") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    val root = java.nio.file.Files.createTempDirectory("graft-ps1r").toString
+    val plain = graft.tables.ManagedTable(spark, s"$root/plain")
+    plain.overwriteAll((0L until 20L).map(i => (i, (i % 2).toString))
+      .toDF("id", "part"), Seq("part"))
+    (0L until 20L).map(i => (i, (i % 2).toString)).toDF("id", "part")
+      .write.partitionBy("part").parquet(s"$root/hive")
+    val converted = graft.tables.ManagedTable(spark, s"$root/hive")
+    converted.convertInPlace()
+    val clone = converted.shallowCloneTo(s"$root/clone")
+    val dv = graft.tables.ManagedTable(spark, s"$root/dv")
+    dv.overwriteAll((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1))
+    spark.conf.set("spark.graft.dv.enabled", "true")
+    try dv.delete("id < 10") finally spark.conf.unset("spark.graft.dv.enabled")
+    dv.manifest.get.files.exists(_.dv.isDefined) shouldBe true
+
+    def relations(t: graft.tables.ManagedTable): Seq[HadoopFsRelation] =
+      t.read().queryExecution.analyzed.collect {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      }
+    def isManifestScan(r: HadoopFsRelation): Boolean =
+      r.location.getClass.getName
+        .startsWith("org.apache.spark.sql.GraftManifestScan$")
+    Seq(plain, converted, clone, dv).foreach { t =>
+      val rels = relations(t)
+      // a DV table's anti-join also scans its deletion-vector sidecars:
+      // table metadata under _graft/_dv, not table data
+      val (sidecars, data) = rels.partition(
+        _.inputFiles.forall(_.contains("/_graft/_dv/")))
+      data should not be empty
+      data.foreach { r =>
+        withClue(s"${t.rootPath}: ${r.location.getClass.getName}") {
+          isManifestScan(r) shouldBe true
+          r.location should not be an[InMemoryFileIndex]
+        }
+      }
+      if (t eq dv) sidecars should not be empty else sidecars shouldBe empty
+    }
+    // the clone's borrowed files take their partition values from the
+    // manifest inside the scan relation — no lookup join
+    clone.read().queryExecution.analyzed.collect { case j: Join => j } shouldBe
+      empty
+    clone.read().count() shouldBe 20L
+  }
+
   test("substring excision: gram winners via hash aggregate, every join " +
       "an equi join — never a cartesian product") {
     val p = plan(graft.ops.TextOps.dedupSubstrings(docs, "doc_id", "text"))

@@ -196,6 +196,62 @@ class ConvertSpec extends AnyFunSuite with Matchers {
     deep.read().orderBy("id").collect()
       .map(r => (r.getInt(0), r.getString(2)))
       .toSeq shouldBe Seq((1, "x"), (2, "y"))
+
+    // null partition values in a STRING and an INT partition column: the
+    // hive default-partition sentinel reads as null on the clone exactly
+    // as on its source, with ANSI casts on (the default) and off
+    val nd = tmp() + "/hive-sc-null"
+    Seq[(Int, String, Option[String], Option[Int])](
+        (1, "a", Some("x"), Some(1)), (2, "b", None, None),
+        (3, "c", None, None))
+      .toDF("id", "name", "ps", "pi")
+      .write.partitionBy("ps", "pi").parquet(nd)
+    val src = ManagedTable(spark, nd)
+    src.convertInPlace()
+    val nc = src.shallowCloneTo(tmp() + "/c-null")
+    def rows(t: ManagedTable): Seq[Seq[Any]] =
+      t.read().orderBy("id").collect().map(_.toSeq).toSeq
+    def underAnsi(f: => Unit): Unit = Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try f finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    underAnsi {
+      rows(src) shouldBe Seq(Seq(1, "a", "x", 1), Seq(2, "b", null, null),
+        Seq(3, "c", null, null))
+      rows(nc) shouldBe rows(src)
+    }
+    // manifest-side pruning still selects exactly the partition's file
+    val pruned = nc.readPartitionsIn(Map("pi" -> Set("1")))
+    pruned.inputFiles should have size 1
+    pruned.collect().map(_.getInt(0)) shouldBe Array(1)
+    // a delete keyed on the null partition runs the tagged (touch
+    // detection) read over the borrowed files and rewrites the survivor
+    Seq(src, nc).foreach(_.delete("ps IS NULL AND id = 3") shouldBe 1L)
+    underAnsi {
+      rows(nc) shouldBe Seq(Seq(1, "a", "x", 1), Seq(2, "b", null, null))
+      rows(nc) shouldBe rows(src)
+    }
+  }
+
+  test("partition filter spelled in another case binds and prunes " +
+      "(case-insensitive analysis)") {
+    import spark.implicits._
+    val dir = tmp() + "/hivecase"
+    Seq((1, "a", "x"), (2, "b", "y"), (3, "c", "y"))
+      .toDF("id", "name", "ps")
+      .write.partitionBy("ps").parquet(dir)
+    val t = ManagedTable(spark, dir)
+    t.convertInPlace()
+    val df = t.read().filter("PS = 'y'")
+    df.collect().map(_.getInt(0)).sorted shouldBe Array(2, 3)
+    // the partition-only predicate reached the manifest file index and
+    // pruned: one of the two partitions' files was read
+    val scans = df.queryExecution.executedPlan.collectLeaves().collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    scans should have size 1
+    scans.head.metrics("numFiles").value shouldBe
+      t.manifest.get.files.count(_.partitionValues("ps") == "y")
   }
 
   test("CONVERT TO GRAFT SQL over a path") {
