@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,7 +9,7 @@ import java.time.{LocalDateTime, ZoneId}
 
 import graft.core.ColumnOps
 import graft.metadata._
-import graft.tables.ManagedTable
+import graft.tables.{ManagedTable, RowCounts}
 import graft.watermark.WatermarkStore
 
 /** The bronze slice after the full transform chain, plus the per-run
@@ -68,8 +68,8 @@ final class Processing(
     * ONE aggregation job computes the record count, the max PK
     * multiplicity, AND every watermark column's max (per-group max then
     * global max equals the global max): a watermarked run previously paid
-    * a separate scan per concern. Partition values (a distinct projection,
-    * different shape) stay their own job. */
+    * a separate scan per concern. The same job observes the partition
+    * values (a set per key would make the hash aggregate sort-based). */
   def source: DatalakeSource = cached.getOrElse {
     val df = transformChain(readSlice()).persist(StorageLevel.MEMORY_AND_DISK)
     // watermark columns resolve through rename+normalize; a column absent
@@ -80,16 +80,20 @@ final class Processing(
     val wmAggs = wmPresent.zipWithIndex.map { case ((_, n), i) =>
       max(col(s"`$n`")).as(s"__wm$i")
     }
+    val partCols = normalizedPartitionColumns
+    val partObs = Observation()
+    val observed = if (partCols.isEmpty) df else df.observe(partObs,
+      collect_set(struct(partCols.map(c => col(s"`$c`").cast("string")): _*)))
     val keyed = entity.businessKeyColumns.nonEmpty && df.columns.contains(pkColumn)
     val row =
       if (keyed) {
-        val perKey = df.groupBy(col(s"`$pkColumn`"))
+        val perKey = observed.groupBy(col(s"`$pkColumn`"))
           .agg(count(lit(1)).as("__cnt"), wmAggs: _*)
         perKey.agg(sum("__cnt").as("__total"), (max("__cnt").as("__maxpk") +:
           wmPresent.indices.map(i =>
             max(col(s"__wm$i")).cast("string").as(s"__wmv$i"))): _*).head()
       } else
-        df.agg(count(lit(1)).as("__total"), (max(lit(1L)).as("__maxpk") +:
+        observed.agg(count(lit(1)).as("__total"), (max(lit(1L)).as("__maxpk") +:
           wmPresent.indices.map(i =>
             max(col(s"`${wmPresent(i)._2}`")).cast("string").as(s"__wmv$i"))): _*)
           .head()
@@ -105,14 +109,13 @@ final class Processing(
       wm -> Option(row.getString(2 + i))
     }.toMap
     val wmValues = entity.watermark.map(wm => wm -> wmByDef.getOrElse(wm, None))
-    val partCols = normalizedPartitionColumns
+    val partSet = if (partCols.isEmpty) Row.empty else RowCounts.observed(partObs)
     val partValues =
-      if (partCols.isEmpty) Nil
-      else df.select(partCols.map(c => col(s"`$c`").cast("string")): _*)
-        .distinct().collect()
-        .map(r => partCols.zipWithIndex.map { case (c, i) =>
+      if (partSet.length == 0) Nil
+      else partSet.getSeq[Row](0).map(r => partCols.zipWithIndex.map {
+        case (c, i) =>
           c -> (if (r.isNullAt(i)) ManagedTable.NullPartitionValue else r.getString(i))
-        }.toMap).toSeq
+      }.toMap)
     val s = DatalakeSource(df, wmValues, partCols, partValues)
     cached = Some(s)
     s

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.metadata.ProcessType
-import graft.tables.{ManagedTable, MergeInto}
+import graft.tables.{MergeInto, RowCounts}
 
 /** Processing strategies (reference: src/main/scala/datalake/processing/
   * Full.scala, Merge.scala, Historic.scala), re-expressed over the managed
@@ -198,10 +198,6 @@ final class HistoricStrategy extends Strategy {
         s"Source is missing target column(s): ${missing.mkString(", ")}")
 
     val pruned = prunedPartitions(p)
-    val target = pruned match {
-      case Some(ps) => p.table.readPartitions(ps.toSet.contains)
-      case None     => p.table.read()
-    }
 
     // Broadcast plan (same shape as MergeBuilder.executeKeyed): the target
     // is scanned once, never shuffled. History rows (IsCurrent=false) fall
@@ -214,7 +210,6 @@ final class HistoricStrategy extends Strategy {
         .join(s,
           expr(s"target.`$pk` = source.`$pk` AND target.`${sys.isCurrent}` = true"),
           "left_outer")
-    val joined = joinSlice(target)
 
     val isMatched = col(graft.tables.MergeBuilder.TFlag).isNotNull && col(graft.tables.MergeBuilder.SFlag).isNotNull
     val targetOnly = col(graft.tables.MergeBuilder.TFlag).isNotNull && col(graft.tables.MergeBuilder.SFlag).isNull
@@ -259,120 +254,86 @@ final class HistoricStrategy extends Strategy {
         .otherwise("kept")
     val mkCol = when(isMatched, col(s"source.`$pk`"))
 
-    def summarize(counts: Map[String, Long], inserted: Long): ProcessingSummary =
+    // ---- phase 1: touch detection + metrics over a narrow projection.
+    // The conditions are evaluated again in phase 2, which is safe because
+    // they are deterministic: the delete window has literal bounds.
+    // Only matched and delete-inferred rows survive ("kept" = history and
+    // untouched currents — the bulk of the table — drops pre-persist), so
+    // the probe is slice/window-bounded, never table-sized.
+    val TFile = "__graft_file"
+    // scan-level file tag (survives the DV anti-join, unlike a
+    // plan-level input_file_name())
+    val targetTagged = pruned match {
+      case Some(ps) => p.table.readPartitionsTagged(ps.toSet.contains, TFile)
+      case None     => p.table.readTagged(TFile)
+    }
+    val probe = joinSlice(targetTagged)
+      .select(col(TFile), actionCol.as("__action"), mkCol.as("__mk"))
+      .filter(col("__action") =!= "kept")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // touched files and action counts from ONE (action, file)
+      // aggregation, as MergeBuilder.executeKeyed does. Only
+      // updated/deleted rows force a rewrite of their file; unchanged
+      // currents are counted but rewrite nothing
+      val byActionFile = probe.groupBy("__action", TFile).count().collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val counts = byActionFile.groupBy(_._1)
+        .map { case (a, rows) => a -> rows.map(_._3).sum }
+      val touchedUris = byActionFile
+        .filter(r => r._1 == "updated" || r._1 == "deleted")
+        .map(_._2).distinct.toSeq
+      val scopeFiles = pruned match {
+        case Some(ps) =>
+          val wanted = ps.toSet
+          manifest.files.filter(f => wanted.contains(f.partitionValues))
+        case None => manifest.files
+      }
+      val lookup = p.table.fileUriLookup(scopeFiles)
+      val translated = touchedUris.map(u => lookup.get(u)
+        .orElse(lookup.get(graft.tables.MergeBuilder.decodeUri(u))))
+      // an untranslatable scan name would leave the old file alongside
+      // its rewrite (duplicates) — fall back to the full pruned scope
+      val touchedPaths: Seq[String] =
+        if (translated.forall(_.isDefined)) translated.map(_.get)
+        else {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"Historic merge on ${p.table.rootPath}: could not map " +
+              s"${translated.count(_.isEmpty)} scanned file name(s) back " +
+              "to manifest entries; rewriting the full pruned scope")
+          scopeFiles.map(_.path)
+        }
+      val touchedSet = touchedPaths.toSet
+      val touchedEntries = scopeFiles.filter(f => touchedSet.contains(f.path))
+
+      val matchedKeys0 = probe.filter(col("__mk").isNotNull)
+        .select(col("__mk").as(pk)).distinct()
+      val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
+      // the inserted count is observed by the phase-2 write job, the
+      // one action that runs the anti-join
+      val inserted = new RowCounts(Seq("inserted" -> lit(true)))
+      val inserts = inserted.on(src.alias("source")
+        .join(matchedKeys, Seq(pk), "left_anti")
+        .select(array(sourceRow).as("__rows")))
+
+      // ---- phase 2: re-resolve ONLY the touched files; untouched
+      // manifest entries (all history, all unchanged-current files)
+      // carry into the new version verbatim — a small CDC slice into a
+      // deep SCD2 table rewrites a handful of files, never the
+      // ever-growing history.
+      val rewrite = joinSlice(p.table.readManifestFiles(manifest, touchedEntries))
+        .select(rowsCol.as("__rows"))
+      val out = rewrite.unionByName(inserts)
+        .select(explode(col("__rows")).as("__r"))
+        .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
+      p.table.replaceFiles(touchedPaths, out, "merge")
       // identity: inserted + updated + unchanged == recordsInSlice
       ProcessingSummary(p.entity.id, "historic", recordsInSlice = n,
-        inserted = inserted,
+        inserted = inserted.counts()("inserted"),
         updated = counts.getOrElse("updated", 0L),
         deleted = counts.getOrElse("deleted", 0L),
         unchanged = counts.getOrElse("unchanged", 0L))
-
-    // The two-phase file-granular path evaluates the conditions twice
-    // (touch detection, rewrite) — a nondeterministic delete-window
-    // expression could diverge between phases and lose rows, so such
-    // configs take the single-pass partition-granular path (same guard as
-    // MergeBuilder.clausesDeterministic; analysis only, no jobs).
-    val twoPhaseSafe = joinSlice(target.limit(0)).select(actionCol.as("__a"))
-      .queryExecution.analyzed.expressions.forall(_.deterministic)
-
-    if (twoPhaseSafe) {
-      // ---- phase 1: touch detection + metrics over a narrow projection.
-      // Only matched and delete-inferred rows survive ("kept" = history and
-      // untouched currents — the bulk of the table — drops pre-persist), so
-      // the probe is slice/window-bounded, never table-sized.
-      val TFile = "__graft_file"
-      // scan-level file tag (survives the DV anti-join, unlike a
-      // plan-level input_file_name())
-      val targetTagged = pruned match {
-        case Some(ps) => p.table.readPartitionsTagged(ps.toSet.contains, TFile)
-        case None     => p.table.readTagged(TFile)
-      }
-      val probe = joinSlice(targetTagged)
-        .select(col(TFile), actionCol.as("__action"), mkCol.as("__mk"))
-        .filter(col("__action") =!= "kept")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var inserts: org.apache.spark.sql.DataFrame = null
-      try {
-        // only updated/deleted rows force a rewrite of their file;
-        // unchanged currents are counted but rewrite nothing
-        val touchedUris = probe
-          .filter(col("__action").isin("updated", "deleted"))
-          .select(TFile).distinct().collect().map(_.getString(0)).toSeq
-        val scopeFiles = pruned match {
-          case Some(ps) =>
-            val wanted = ps.toSet
-            manifest.files.filter(f => wanted.contains(f.partitionValues))
-          case None => manifest.files
-        }
-        val lookup = p.table.fileUriLookup(scopeFiles)
-        val translated = touchedUris.map(u => lookup.get(u)
-          .orElse(lookup.get(graft.tables.MergeBuilder.decodeUri(u))))
-        // an untranslatable scan name would leave the old file alongside
-        // its rewrite (duplicates) — fall back to the full pruned scope
-        val touchedPaths: Seq[String] =
-          if (translated.forall(_.isDefined)) translated.map(_.get)
-          else {
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"Historic merge on ${p.table.rootPath}: could not map " +
-                s"${translated.count(_.isEmpty)} scanned file name(s) back " +
-                "to manifest entries; rewriting the full pruned scope")
-            scopeFiles.map(_.path)
-          }
-        val touchedSet = touchedPaths.toSet
-        val touchedEntries = scopeFiles.filter(f => touchedSet.contains(f.path))
-
-        val counts = probe.groupBy("__action").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val matchedKeys0 = probe.filter(col("__mk").isNotNull)
-          .select(col("__mk").as(pk)).distinct()
-        val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
-        inserts = src.alias("source")
-          .join(matchedKeys, Seq(pk), "left_anti")
-          .select(array(sourceRow).as("__rows"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val inserted = inserts.count()
-
-        // ---- phase 2: re-resolve ONLY the touched files; untouched
-        // manifest entries (all history, all unchanged-current files)
-        // carry into the new version verbatim — a small CDC slice into a
-        // deep SCD2 table rewrites a handful of files, never the
-        // ever-growing history.
-        val rewrite = joinSlice(p.table.readManifestFiles(manifest, touchedEntries))
-          .select(rowsCol.as("__rows"))
-        val out = rewrite.unionByName(inserts)
-          .select(explode(col("__rows")).as("__r"))
-          .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
-        p.table.replaceFiles(touchedPaths, out, "merge")
-        summarize(counts, inserted)
-      } finally {
-        probe.unpersist()
-        if (inserts != null) inserts.unpersist()
-      }
-    } else {
-      // ---- single-pass fallback: resolve every scope row once, persist,
-      // derive metrics and the commit from that one frame (self-consistent
-      // under nondeterministic expressions), partition-granular commit.
-      val resolved = joined.select(rowsCol.as("__rows"),
-          actionCol.as("__action"), mkCol.as("__mk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val matchedKeys0 = resolved.filter(col("__mk").isNotNull)
-        .select(col("__mk").as(pk)).distinct()
-      val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
-      val inserts = src.alias("source")
-        .join(matchedKeys, Seq(pk), "left_anti")
-        .select(array(sourceRow).as("__rows"), lit("inserted").as("__action"),
-          lit(null).cast("string").as("__mk"))
-      val emitted = resolved.unionByName(inserts)
-      try {
-        val counts = emitted.groupBy("__action").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val out = emitted
-          .select(explode(col("__rows")).as("__r"))
-          .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
-        p.table.replacePartitions(pruned, out, "merge")
-        summarize(counts, counts.getOrElse("inserted", 0L))
-      } finally resolved.unpersist()
-    }
+    } finally probe.unpersist()
   }
 }
 

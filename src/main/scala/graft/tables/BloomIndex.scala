@@ -232,14 +232,6 @@ object BloomIndex {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Delete every sidecar of one data file (any column) — called by
-    * vacuum after it deletes the file itself. */
-  private[tables] def deleteFor(
-      fs: FileSystem, bloomDir: Path, relPath: String): Unit =
-    if (fs.exists(bloomDir))
-      fs.globStatus(new Path(bloomDir, s"${fileKey(relPath)}.*"))
-        .foreach(st => fs.delete(st.getPath, false))
-
   /** Delete every sidecar of one column (any file) — dropBloomIndex. */
   private[tables] def deleteColumn(
       fs: FileSystem, bloomDir: Path, column: String): Unit =

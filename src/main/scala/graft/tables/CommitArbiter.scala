@@ -148,18 +148,19 @@ private[tables] final class PosixCommitArbiter(tmpDir: Path)
   }
 }
 
-/** Conditional-put stores (S3-style): no tmp, no rename — the store's
-  * per-object atomicity carries the contract. `putIfAbsent` maps to a
-  * conditional create (`overwrite = false`, the filesystem-level
-  * equivalent of S3 `If-None-Match: *`); `putAtomic` to a plain
+/** Conditional-put stores (S3-style): arbitration needs no tmp and no
+  * rename — the store's per-object atomicity carries the contract.
+  * `putIfAbsent` maps to a conditional create (`overwrite = false`,
+  * the filesystem-level equivalent of S3 `If-None-Match: *`);
+  * `putAtomic` to a plain
   * overwrite PUT. On a real object store connector both are single
-  * requests and the object swap is atomic; running it against a plain
-  * filesystem (as tests do) keeps the same visible semantics except
-  * that an in-flight PUT could be observed torn — which is exactly the
-  * property the STORE, not this class, must provide. A crash inside the
-  * filesystem simulation's create→write window leaves a zero-length or
-  * truncated record; `ManagedTable.maybeDropTornRecord` (age-gated)
-  * frees the slot so the table never wedges.
+  * requests and the object swap is atomic; on a local filesystem (as
+  * tests run it) `putAtomic` keeps that contract with a same-directory
+  * rename, while a `putIfAbsent` record could still be observed torn in
+  * flight — the property the STORE, not this class, must provide. A
+  * crash inside the filesystem simulation's create→write window leaves a
+  * zero-length or truncated record; `ManagedTable.maybeDropTornRecord`
+  * (age-gated) frees the slot so the table never wedges.
   *
   * The torn window cuts the other way too: a concurrent prober running
   * with a zero torn-record grace can judge OUR in-flight object torn,
@@ -262,11 +263,17 @@ private[tables] final class ConditionalPutCommitArbiter(fs: FileSystem)
           "and claimed the slot): treating as a lost race")
   }
 
-  override def putAtomic(target: Path, content: String): Unit = {
-    val out = fs.create(target, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** A plain overwrite PUT. On a local filesystem, where an overwriting
+    * create truncates first (a racing reader could see an empty object),
+    * the store's atomic swap is a same-directory tmp write + `rename(2)`. */
+  override def putAtomic(target: Path, content: String): Unit =
+    if (fs.getUri.getScheme == "file")
+      new PosixCommitArbiter(target.getParent).putAtomic(target, content)
+    else {
+      val out = fs.create(target, true)
+      try out.write(content.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
 }
 
 private[tables] object ConditionalPutCommitArbiter {

@@ -1973,8 +1973,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
             .filter(f => d0.columns.contains(f.name))
             .foldLeft(d0)((acc, f) => acc.withColumn(f.name,
               col(s"`${f.name}`").as(f.name, f.metadata))))
-      enforceConstraints(d, cs, operation)
-      val files = writeCommit(d, partitionBy)
+      val files = writeCommit(d, partitionBy, None, cs, operation)
       commitDelta(d.schema.json, partitionBy, operation,
         base = None, adds = files, removes = Nil, txn = txn,
         constraintsOverride = Some(cs), generatedOverride = Some(gs),
@@ -1998,9 +1997,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val g = applyGenerated(withIds, m.generated, Some(m.schema),
           "overwriteDynamic")
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, "overwriteDynamic")
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(d, partitionBy, cmx)
+        val newFiles =
+          writeCommit(d, partitionBy, cmx, m.constraints, "overwriteDynamic")
         val replaced = newFiles.map(_.partitionValues).toSet
         val removed = m.files.filter(f => replaced.contains(f.partitionValues))
         commitDelta(d.schema.json, partitionBy, "overwriteDynamic",
@@ -2043,11 +2042,12 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val g = applyGenerated(withIds, m.generated, Some(m.schema),
           "replaceWhere")
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, "replaceWhere")
-        if (d.filter(!pred).limit(1).count() > 0)
-          throw new ConstraintViolationException(
-            s"replaceWhere on $rootPath: inserted rows do not all match " +
-              s"'$condition' — they would fall outside the replaced region")
+        // region membership of the INSERTED rows (not the survivors, which
+        // are exactly the rows outside it) is counted by the write job
+        val inRegion = new RowCounts(Seq("outside" -> !pred))
+        val outsideRegion = (_: String) => new ConstraintViolationException(
+          s"replaceWhere on $rootPath: inserted rows do not all match " +
+            s"'$condition' — they would fall outside the replaced region")
 
         val (removePaths, keptRows): (Seq[String], Option[DataFrame]) =
           partitionOnlyMatches(m, condition) match {
@@ -2080,10 +2080,12 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           }
         // survivors were read under m's logical schema; align to the
         // reconciled insert frame by name before the single write
-        val content = keptRows.fold(d)(k =>
-          d.unionByName(k.select(d.columns.map(c => col(s"`$c`")): _*)))
+        val inserted = inRegion.on(d)
+        val content = keptRows.fold(inserted)(k => inserted.unionByName(
+          k.select(d.columns.map(c => col(s"`$c`")): _*)))
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(content, m.partitionColumns, cmx)
+        val newFiles = writeCommit(content, m.partitionColumns, cmx,
+          m.constraints, "replaceWhere", Seq(inRegion -> outsideRegion))
         // replaceWhere's read set IS the predicate region (inserted rows
         // are constrained to it above), so it rebases under the same
         // predicate-aware rule as DML
@@ -2130,9 +2132,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           applyIdentity(df, m, operation, keepExisting = false)
         val g = applyGenerated(withIds, m.generated, Some(m.schema), operation)
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, operation)
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(d, m.partitionColumns, cmx)
+        val newFiles =
+          writeCommit(d, m.partitionColumns, cmx, m.constraints, operation)
         // a TERMINAL commit failure must not orphan the just-written
         // commit dir (every path of this append shares one
         // data/<commitId>/ root, and no manifest references it until
@@ -2635,9 +2637,29 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         }
       }
 
-      var adds = List.empty[TableFile]
-      var removes = dropPaths
+      // classic-rewrite survivors for over-fraction files, plus (UPDATE)
+      // the updated images of the masked files' matched rows — written
+      // before the sidecar, so a CHECK violation (the write job's own
+      // verdict) leaves no sidecar behind
       val dvNames = dvEntries.map { case (f, _) => new Path(f.path).getName }
+      val rwNames = rewriteEntries.map(f => new Path(f.path).getName)
+      val rwContent =
+        if (rewriteEntries.isEmpty) None
+        else Some(rewrite(
+          notPriorMasked(raw.filter(col(DvFileCol).isin(rwNames: _*))), pred)
+          .select(schemaCols: _*))
+      val updContent =
+        if (op != "update" || dvEntries.isEmpty) None
+        else Some(rewrite(live.filter(col(DvFileCol).isin(dvNames: _*)), pred)
+          .select(schemaCols: _*))
+      var adds = (rwContent.toSeq ++ updContent.toSeq).reduceOption(_ union _)
+        .toList.flatMap { content0 =>
+          val content = applyGenerated(content0, m.generated, Some(m.schema),
+            op, recompute = true)
+          writeCommit(content, m.partitionColumns, m.columnMapping,
+            m.constraints, op)
+        }
+      var removes = dropPaths
       if (dvEntries.nonEmpty) {
         val name = s"dv-${UUID.randomUUID().toString}"
         rebalanced(live.filter(col(DvFileCol).isin(dvNames: _*))
@@ -2649,26 +2671,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           f.copy(dv = Some(name), dvRows = Some(dead)) }
         removes ++= dvEntries.map(_._1.path)
       }
-
-      // classic-rewrite survivors for over-fraction files, plus (UPDATE)
-      // the updated images of the masked files' matched rows
-      val rwNames = rewriteEntries.map(f => new Path(f.path).getName)
-      val rwContent =
-        if (rewriteEntries.isEmpty) None
-        else Some(rewrite(
-          notPriorMasked(raw.filter(col(DvFileCol).isin(rwNames: _*))), pred)
-          .select(schemaCols: _*))
-      val updContent =
-        if (op != "update" || dvEntries.isEmpty) None
-        else Some(rewrite(live.filter(col(DvFileCol).isin(dvNames: _*)), pred)
-          .select(schemaCols: _*))
-      (rwContent.toSeq ++ updContent.toSeq).reduceOption(_ union _)
-        .foreach { content0 =>
-          val content = applyGenerated(content0, m.generated, Some(m.schema),
-            op, recompute = true)
-          enforceConstraints(content, m.constraints, op)
-          adds ++= writeCommit(content, m.partitionColumns, m.columnMapping)
-        }
       removes ++= rewriteEntries.map(_.path)
 
       commitDelta(m.schemaJson, m.partitionColumns, op,
@@ -2696,8 +2698,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * satisfy `expression` (one short-circuit scan — same price Delta
     * pays), then publishes the constraint as a metadata-only commit.
     * From then on every data write (append, overwrite, merge, DML
-    * rewrite, streaming batch) runs a limit-1 violation probe and fails
-    * the transaction naming the constraint. SQL CHECK semantics: a NULL
+    * rewrite, streaming batch) counts violations inside its own write
+    * job and fails the transaction naming the constraint before any
+    * commit record is written. SQL CHECK semantics: a NULL
     * evaluation passes; only FALSE violates. NOT NULL is
     * `addConstraint("c_nn", "c IS NOT NULL")`. */
   def addConstraint(name: String, expression: String): Unit = withWriteLock {
@@ -2705,7 +2708,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     if (m.constraints.contains(name))
       throw new MetadataException(
         s"constraint '$name' already exists on $rootPath")
-    enforceConstraints(readSnapshot(m), Map(name -> expression), "addConstraint")
+    if (!readSnapshot(m).filter(violates(expression)).isEmpty)
+      throw constraintViolated(name, expression, "addConstraint")
     commitDelta(m.schemaJson, m.partitionColumns, s"addConstraint $name",
       base = Some(m), adds = Nil, removes = Nil,
       constraintsOverride = Some(m.constraints + (name -> expression)))
@@ -2902,6 +2906,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
   def identityColumnNames: Set[String] =
     manifest.map(m => identityRules(m).keySet).getOrElse(Set.empty)
 
+  /** Whether writes to `m` run [[applyIdentity]]'s allocation passes. */
+  private[tables] def allocatesIdentity(m: Manifest): Boolean =
+    identityRules(m).nonEmpty
+
   /** Identity rules of a manifest: column → (step, next watermark). */
   private def identityRules(m: Manifest): Map[String, (Long, Long)] =
     m.properties.collect {
@@ -3092,26 +3100,16 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     Seq("compact", "compactSmall", "zorder", "collectStatistics", "restore",
       "purgeDv")
 
-  /** Limit-1 violation probe: one short-circuit job when constraints
-    * exist, zero cost otherwise. Violation = expression IS FALSE (SQL
-    * CHECK three-valued logic: NULL passes). */
-  private def enforceConstraints(df: DataFrame,
-      cs: Map[String, String], operation: String): Unit =
-    if (cs.nonEmpty && !ConstraintExemptOps.exists(operation.startsWith)) {
-      val flags = cs.toSeq.map { case (n, e) =>
-        n -> !coalesce(expr(e), lit(true)) }
-      val viol = df.filter(flags.map(_._2).reduce(_ || _))
-        .select(flags.map { case (n, c) => c.as(n) }: _*)
-        .limit(1).collect()
-      if (viol.nonEmpty) {
-        val row = viol.head
-        val name = flags.indices.find(i => row.getBoolean(i))
-          .map(flags(_)._1).getOrElse(flags.head._1)
-        throw new ConstraintViolationException(
-          s"CHECK constraint '$name' (${cs(name)}) violated by a row " +
-            s"written to $rootPath during '$operation'")
-      }
-    }
+  /** Rows violating a CHECK constraint: its expression IS FALSE (SQL
+    * three-valued logic, NULL passes). */
+  private def violates(expression: String): Column =
+    !coalesce(expr(expression), lit(true))
+
+  private def constraintViolated(name: String, expression: String,
+      operation: String): ConstraintViolationException =
+    new ConstraintViolationException(
+      s"CHECK constraint '$name' ($expression) violated by a row " +
+        s"written to $rootPath during '$operation'")
 
   /** Additive schema evolution as a METADATA-ONLY commit: publish a
     * widened schema (existing fields unchanged, new fields appended
@@ -3614,9 +3612,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
       recompute = true)
     val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles = writeCommit(d, m.partitionColumns, cmx)
+    val newFiles =
+      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation)
     commitReplaceWithRebase(m, logicalSchema(d).json, operation, newFiles,
       removePaths, txn, Some(cmx), propsOv, dmlRebasePredicate)
     maybeAutoCompact()
@@ -3712,13 +3710,12 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       operation: String,
       propsExtraFor: Long => Map[String, String] = _ => Map.empty): Unit = {
     val d = reconcileSchema(df, base)
-    enforceConstraints(d, base.constraints, operation)
     val cmx = extendMapping(base.columnMapping, logicalSchema(d))
     // preserveLayout: the maintenance caller range-partitioned and sorted
     // its frame (zorder / cluster / compact targets); a rebalance here
     // would scatter the locality the rewrite exists to create
     val newFiles = writeCommit(d, base.partitionColumns, cmx,
-      preserveLayout = true)
+      base.constraints, operation, preserveLayout = true)
     // row-tracking watermark bumps are invisible to a content-preserving
     // rewrite — an interleaved append moving ONLY the watermark must not
     // forfeit the OPTIMIZE (the rewritten files carry their IDs
@@ -3801,8 +3798,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
       recompute = true)
     val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
-    var adds = List.empty[TableFile]
+    // content first: a CHECK violation then leaves no sidecar behind
+    val cmx = extendMapping(m.columnMapping, logicalSchema(d))
+    var adds =
+      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation).toList
     if (dvUpdates.nonEmpty) {
       val name = s"dv-${UUID.randomUUID().toString}"
       val entries = dvUpdates.map(_._1)
@@ -3820,8 +3819,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       adds ++= dvUpdates.map { case (f, dead) =>
         f.copy(dv = Some(name), dvRows = Some(dead)) }
     }
-    val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    adds ++= writeCommit(d, m.partitionColumns, cmx)
     commitDelta(logicalSchema(d).json, m.partitionColumns, operation,
       base = Some(m), adds = adds,
       removes = dropPaths ++ replacePaths ++ dvUpdates.map(_._1.path),
@@ -4024,9 +4021,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
       recompute = true)
     val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles = writeCommit(d, m.partitionColumns, cmx)
+    val newFiles =
+      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation)
     val removed = partitions match {
       case None => m.files
       case Some(ps) =>
@@ -4797,17 +4794,32 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
 
   /** Write `df` as immutable files under a fresh commit dir; return the
     * created [[TableFile]]s with their partition values. One distributed
-    * write job regardless of partition count. */
+    * write job regardless of partition count, and that job is also the
+    * check: it counts the rows violating each of `constraints` (none for
+    * maintenance rewrites) and any `guards` the caller attached to parts
+    * of `df`. On a violation the commit dir is deleted and the error
+    * thrown, before any commit record exists. */
   private def writeCommit(df: DataFrame, partitionBy: Seq[String],
-      cm: Option[ColumnMapping] = None,
+      cm: Option[ColumnMapping], constraints: Map[String, String],
+      operation: String,
+      guards: Seq[(RowCounts, String => ConstraintViolationException)] = Nil,
       preserveLayout: Boolean = false): Seq[TableFile] = {
+    val checks = new RowCounts(
+      if (ConstraintExemptOps.exists(operation.startsWith)) Nil
+      else constraints.toSeq.map { case (n, e) => n -> violates(e) })
+    val checked = checks.on(df)
     // data files store PHYSICAL column names (no-op while mapping is
     // inactive); stats and bloom sidecars key by them too, so a later
     // rename invalidates nothing
-    val phys = cm.fold(df)(c => df.select(
-      df.columns.toSeq.map(n => col(s"`$n`").as(c.physical(n))): _*))
+    val phys = cm.fold(checked)(c => checked.select(
+      checked.columns.toSeq.map(n => col(s"`$n`").as(c.physical(n))): _*))
+    val commitDir = new Path(dataDir, UUID.randomUUID().toString)
     val files = writeCommitFiles(phys, partitionBy.map(c =>
-      cm.fold(c)(_.physical(c))), preserveLayout)
+      cm.fold(c)(_.physical(c))), commitDir, preserveLayout)
+    val allChecks = (checks, (n: String) =>
+      constraintViolated(n, constraints(n), operation)) +: guards
+    allChecks.iterator.flatMap { case (c, error) => c.nonZero().map(error) }
+      .nextOption().foreach { e => fs.delete(commitDir, true); throw e }
     // bloom sidecars ride the commit's files (one distributed pass over
     // just-written data, indexed columns only); a failed build degrades
     // to "no sidecar → file kept", so it must never fail the commit
@@ -4857,22 +4869,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     else df
 
   private def writeCommitFiles(
-      df: DataFrame, partitionBy: Seq[String],
-      preserveLayout: Boolean = false): Seq[TableFile] = {
-    val commitId = UUID.randomUUID().toString
-    val commitDir = new Path(dataDir, commitId)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // sizes come free with the post-write listing (Delta records
-    // AddFile.size the same way): maintenance and streaming admission
-    // control then price files from the manifest, zero extra RPCs
-    def toFile(p: Path, len: Long, pv: Map[String, String],
-        metas: Map[String, FileStatistics.FileMeta]): TableFile = {
-      val fm = metas.getOrElse(p.toString, FileStatistics.FileMeta(Map.empty, -1L))
-      TableFile(rel(p), pv, fm.cols,
-        if (fm.rows >= 0) Some(fm.rows) else None, Some(len),
-        nullCounts = fm.nulls)
-    }
-    if (partitionBy.isEmpty) {
+      df: DataFrame, partitionBy: Seq[String], commitDir: Path,
+      preserveLayout: Boolean): Seq[TableFile] = {
+    val writer = if (partitionBy.isEmpty) {
       // AQE-sized rebalance (Delta optimized-write's shape for DML): a
       // small-delta commit — MERGE/UPDATE/DELETE rewrite, CDC upsert,
       // matview refresh — otherwise emits one tiny file PER UPSTREAM
@@ -4888,12 +4887,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       // cluster / compact pre-sorted their frame), when AQE is off (a
       // blind exchange would fix nothing), or via the
       // spark.graft.write.rebalance table property / conf escape hatch.
-      val toWrite = if (preserveLayout) df else rebalanced(df)
-      Phase("write")(toWrite.write.options(commitWriteOpts).parquet(commitDir.toString))
-      val listed = Phase("list")(listParquet(commitDir))
-      val stats = Phase("footerStats")(
-        FileStatistics.forPaths(spark, conf, listed.map(_._1), maxIndexedCols))
-      listed.map { case (p, len) => toFile(p, len, Map.empty, stats) }
+      (if (preserveLayout) df else rebalanced(df)).write
     } else {
       val dirCols = partitionBy.map(c => s"__gp_$c")
       val withDirCols0 = partitionBy.zip(dirCols).foldLeft(df) {
@@ -4920,22 +4914,26 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
             else Nil)
           withDirCols0.repartition(keys: _*)
         } else withDirCols0
-      Phase("write")(withDirCols.write.options(commitWriteOpts)
-        .partitionBy(dirCols: _*).parquet(commitDir.toString))
-      val listed = Phase("list")(listParquet(commitDir))
-      val stats = Phase("footerStats")(
-        FileStatistics.forPaths(spark, conf, listed.map(_._1), maxIndexedCols))
-      listed.map { case (p, len) =>
-        val relPath = rel(p)
-        val pv = relPath.split('/').iterator
-          .filter(_.contains("="))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k.stripPrefix("__gp_") -> hiveUnescape(v)
-          }
-          .toMap
-        toFile(p, len, pv, stats)
-      }
+      withDirCols.write.partitionBy(dirCols: _*)
+    }
+    Phase("write")(writer.options(commitWriteOpts).parquet(commitDir.toString))
+    val listed = Phase("list")(listParquet(commitDir))
+    val stats = Phase("footerStats")(FileStatistics.forPaths(spark,
+      spark.sparkContext.hadoopConfiguration, listed.map(_._1), maxIndexedCols))
+    // sizes come free with the post-write listing (Delta records
+    // AddFile.size the same way): maintenance and streaming admission
+    // control then price files from the manifest, zero extra RPCs
+    listed.map { case (p, len) =>
+      val relPath = rel(p)
+      // partition values from the `__gp_<col>=<value>` directories
+      val pv = if (partitionBy.isEmpty) Map.empty[String, String]
+        else relPath.split('/').iterator.filter(_.contains("=")).map { seg =>
+          val Array(k, v) = seg.split("=", 2)
+          k.stripPrefix("__gp_") -> hiveUnescape(v)
+        }.toMap
+      val fm = stats.getOrElse(p.toString, FileStatistics.FileMeta(Map.empty, -1L))
+      TableFile(relPath, pv, fm.cols, if (fm.rows >= 0) Some(fm.rows) else None,
+        Some(len), nullCounts = fm.nulls)
     }
   }
 

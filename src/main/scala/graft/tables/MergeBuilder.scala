@@ -21,9 +21,11 @@ import org.apache.spark.storage.StorageLevel
   * {{{
   *   target (partition-pruned) FULL OUTER JOIN source ON <condition>
   *   → per-column CASE chain picks target/source/override value
-  *   → action tag column → metrics (single aggregate)
+  *   → action tag column → metrics (observed by the write job itself)
   *   → atomic replacePartitions commit
   * }}}
+  * Either way the action counts and the CHECK verdict are metrics of the
+  * write job itself ([[RowCounts]]): nothing is cached or re-scanned.
   *
   * Scale behavior: joins hash on the (already hashed, uniformly
   * distributed) PK — no skew by construction. Only partitions named in
@@ -68,10 +70,10 @@ final class MergeBuilder private[tables] (
   }
 
   /** Declare the source too large to broadcast (a backfill slice, a
-    * table-sized CDC batch): the keyed path then drops its broadcast
-    * hints and lets Catalyst/AQE pick a shuffle join — the target IS
-    * shuffled in exchange for not materializing the source on every
-    * executor (and not OOMing the driver building the broadcast). */
+    * table-sized CDC batch): the merge then drops its broadcast and
+    * shuffle-hash hints and lets Catalyst/AQE pick a shuffle join — the
+    * target IS shuffled in exchange for not materializing the source on
+    * every executor (and not OOMing the driver building the broadcast). */
   def largeSource(): this.type = { broadcastSource = false; this }
 
   /** Skip the keyed path's multi-match guard when the caller has already
@@ -167,10 +169,9 @@ final class MergeBuilder private[tables] (
 
   /** A pruned scope small enough that the keyed path's touch-detection
     * probe cannot pay for itself: every scope file would be cheap to
-    * rewrite outright, so the single-phase generic resolve (one action
-    * materializes the persisted resolve for metrics, the write re-reads
-    * the cache) beats probe + selective rewrite + insert anti-join by a
-    * whole action on the commit-latency path. Sized from MANIFEST bytes
+    * rewrite outright, so the single-phase generic resolve (one write job
+    * that also counts the actions) beats probe + selective rewrite +
+    * insert anti-join on the commit-latency path. Sized from MANIFEST bytes
     * only — an entry without a recorded size disqualifies (conservative:
     * stay file-granular). DV tables keep the keyed path (its masking
     * avoids the rewrite entirely, strictly better). At 100 TB the bound
@@ -204,11 +205,12 @@ final class MergeBuilder private[tables] (
     * (`rand()`, `current_timestamp()`) could flag a file untouched in phase
     * 1 yet resolve a row as updated in phase 2, silently losing the update.
     * Such merges take the single-pass generic path, where the resolved
-    * frame is persisted and written directly (self-consistent by
-    * construction). Determinism is checked on the ANALYZED expressions:
-    * an unresolved `rand()` is just an `UnresolvedFunction` whose
-    * `deterministic` defaults to true, so the conditions are resolved
-    * against an empty two-sided join frame first (analysis only, no jobs). */
+    * frame is computed once, by the write job that also counts its actions
+    * (self-consistent by construction). Determinism is checked on the
+    * ANALYZED expressions: an unresolved `rand()` is just an
+    * `UnresolvedFunction` whose `deterministic` defaults to true, so the
+    * conditions are resolved against an empty two-sided join frame first
+    * (analysis only, no jobs). */
   private[tables] def clausesDeterministic: Boolean = {
     val conds = clauses.flatMap(_.cond)
     conds.isEmpty || {
@@ -300,7 +302,10 @@ final class MergeBuilder private[tables] (
       .withColumn(TFlag, lit(true))
       .withColumn(TRowId, monotonically_increasing_id())
       .alias("target")
-    val s = source.withColumn(SFlag, lit(true)).alias("source")
+    // a broadcast-sized source is the build side of a shuffled hash join:
+    // the scope-sized target side is then hashed, never sorted
+    val s0 = source.withColumn(SFlag, lit(true)).alias("source")
+    val s = if (broadcastSource) s0.hint("shuffle_hash") else s0
     val joined = t.join(s, expr(condition), "full_outer")
 
     val isMatched = col(TFlag).isNotNull && col(SFlag).isNotNull
@@ -314,38 +319,22 @@ final class MergeBuilder private[tables] (
     }
     def clauseCond(c: Clause): Column =
       c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
-    def tag(i: Int, c: Clause): String = c.kind match {
-      case Matched            => s"m$i"
-      case NotMatched         => s"nm$i"
-      case NotMatchedBySource => s"bs$i"
-    }
 
     val indexed = clauses.zipWithIndex
     // action tag: first clause whose scope+condition holds; else keep/drop
     val actionCol = indexed.foldRight(
       when(sourceOnly, lit(DropTag)).otherwise(lit(UnchangedTag))) {
-      case ((c, i), rest) => when(clauseCond(c), lit(tagFor(c, tag(i, c)))).otherwise(rest)
+      case ((c, i), rest) => when(clauseCond(c), lit(tagOf(c, i))).otherwise(rest)
     }
-
-    // per-column value: walk the same clause chain
-    def valueFor(c: Clause, colName: String): Column = c.action match {
-      // source-absent generated column: placeholder (target value — NULL
-      // on a not-matched row), recomputed from its rule at commit
-      case UpdateAll | InsertAll if genAbsent(colName) =>
-        col(s"target.`$colName`")
-      case UpdateAll      => col(s"source.`$colName`")
-      case InsertAll      => col(s"source.`$colName`")
-      case UpdateSet(set) => set.get(colName).map(expr)
-        .getOrElse(col(s"target.`$colName`"))
-      // unset columns fall back to target.* — NULL on a not-matched row,
-      // which is exactly insert(set)'s fill semantics
-      case InsertSet(set) => set.get(colName).map(expr)
-        .getOrElse(col(s"target.`$colName`"))
-      case Delete         => col(s"target.`$colName`") // dropped by action filter
-    }
+    // values pick their clause by the row's action tag, evaluated ONCE
+    // per row: re-evaluating the clause conditions per column would give
+    // every `rand()` occurrence its own seed, so the values written could
+    // follow a different clause than the action counted
+    val action = col(ActionCol)
     val outCols = targetCols.map { name =>
       indexed.foldRight(col(s"target.`$name`")) { case ((c, i), rest) =>
-        when(clauseCond(c), valueFor(c, name)).otherwise(rest)
+        when(action === lit(tagOf(c, i)), valueFor(c, name))
+          .otherwise(rest)
       }.as(name)
     }
 
@@ -353,42 +342,73 @@ final class MergeBuilder private[tables] (
       if (rtActive)
         Seq(col(s"target.`${ManagedTable.MatRowIdCol}`")
             .as(ManagedTable.MatRowIdCol),
-          when(actionCol === lit(UnchangedTag),
+          when(action === lit(UnchangedTag),
               col(s"target.`${ManagedTable.MatRowCvCol}`"))
             .otherwise(lit(m.version + 1))
             .as(ManagedTable.MatRowCvCol))
       else Nil
-    val resolved = joined
-      .select(outCols ++ matCarry ++ Seq(actionCol.as(ActionCol),
+    val resolved = joined.withColumn(ActionCol, actionCol)
+      .select(outCols ++ matCarry ++ Seq(action,
         when(col(SFlag).isNotNull, col(TRowId)).as(TRowId)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Delta contract: multiple source rows matching one target row is an
+    // error, not silent duplication (skipped when the caller asserted
+    // key-unique sources — the keyed path's same contract)
+    if (!sourceKeysUnique) {
+      val multi = resolved.filter(col(TRowId).isNotNull)
+        .groupBy(TRowId).count().filter(col("count") > 1).limit(1).count()
+      if (multi > 0)
+        throw new graft.metadata.MetadataException(
+          "MERGE source has multiple rows matching one target row")
+    }
+    // the action counts are observed by the write job itself: they count
+    // exactly the rows written, even under a nondeterministic condition,
+    // and no job or cache exists to count. Identity allocation breaks the
+    // one-action rule (a count and a `zipWithIndex` run over the frame
+    // before its write), so on such a table the frame stays persisted and
+    // is counted from the cache, which all three passes then read.
+    val identity = table.allocatesIdentity(m)
+    val counted = actionCounts(indexed.map { case (c, i) => tagOf(c, i) } :+
+      UnchangedTag :+ DropTag)
+    val written =
+      if (identity) resolved.persist(StorageLevel.MEMORY_AND_DISK)
+      else counted.on(resolved)
     try {
-      // Delta contract: multiple source rows matching one target row is an
-      // error, not silent duplication (skipped when the caller asserted
-      // key-unique sources — the keyed path's same contract)
-      if (!sourceKeysUnique) {
-        val multi = resolved.filter(col(TRowId).isNotNull)
-          .groupBy(TRowId).count().filter(col("count") > 1).limit(1).count()
-        if (multi > 0)
-          throw new graft.metadata.MetadataException(
-            "MERGE source has multiple rows matching one target row")
-      }
-      val counts = resolved.groupBy(ActionCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val kept = resolved
+      val cached = if (!identity) None else Some(written.groupBy(ActionCol)
+        .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val kept = written
         .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
         .drop(ActionCol, TRowId)
       table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
         kept, operationName, txn)
-      MergeMetrics(counts - DropTag)
-    } finally resolved.unpersist()
+      MergeMetrics(cached.getOrElse(counted.counts().filter(_._2 != 0L)) - DropTag)
+    } finally if (identity) written.unpersist()
   }
 
-  private def tagFor(c: Clause, base: String): String =
-    c.action match {
-      case Delete => DeletePrefix + base
-      case _      => base
+  /** Row counts per [[ActionCol]] tag, to be observed by a write job. */
+  private def actionCounts(tags: Seq[String]): RowCounts =
+    new RowCounts(tags.map(t => t -> (col(ActionCol) === t)))
+
+  /** Clause `i`'s action tag: `m<i>`, `nm<i>` or `bs<i>` by kind,
+    * `del:`-prefixed for a delete. */
+  private def tagOf(c: Clause, i: Int): String = {
+    val base = c.kind match {
+      case Matched            => s"m$i"
+      case NotMatched         => s"nm$i"
+      case NotMatchedBySource => s"bs$i"
     }
+    if (c.action == Delete) DeletePrefix + base else base
+  }
+
+  /** Column `colName`'s value under clause `c`. `target.*` (NULL on a
+    * not-matched row) stands in for columns an insert(set) leaves unset and
+    * for source-absent generated/identity columns the commit fills. */
+  private def valueFor(c: Clause, colName: String): Column = c.action match {
+    case UpdateAll | InsertAll if genAbsent(colName) => col(s"target.`$colName`")
+    case UpdateAll | InsertAll => col(s"source.`$colName`")
+    case UpdateSet(set) => set.get(colName).map(expr).getOrElse(col(s"target.`$colName`"))
+    case InsertSet(set) => set.get(colName).map(expr).getOrElse(col(s"target.`$colName`"))
+    case Delete => col(s"target.`$colName`")
+  }
 
   /** Keyed fast path: the target table is NEVER shuffled, and only the
     * FILES a clause actually touches are rewritten (Delta MERGE's rewrite
@@ -444,15 +464,10 @@ final class MergeBuilder private[tables] (
     }
     def clauseCond(c: Clause): Column =
       c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
-    def tag(i: Int, c: Clause): String = c.kind match {
-      case Matched            => s"m$i"
-      case NotMatched         => s"nm$i"
-      case NotMatchedBySource => s"bs$i"
-    }
 
     val indexed = clauses.zipWithIndex
     val actionCol = indexed.foldRight(lit(UnchangedTag): Column) {
-      case ((c, i), rest) => when(clauseCond(c), lit(tagFor(c, tag(i, c)))).otherwise(rest)
+      case ((c, i), rest) => when(clauseCond(c), lit(tagOf(c, i))).otherwise(rest)
     }
 
     // ---- phase 1: touch detection + metrics (narrow projection; only
@@ -471,7 +486,6 @@ final class MergeBuilder private[tables] (
         when(col(SFlag).isNotNull, col(TRowId)).as(TRowId))
       .filter(col(ActionCol) =!= UnchangedTag || col(MatchKey).isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var inserts: DataFrame = null
     try {
       // Delta contract (same check as the generic path): multiple source
       // rows matching ONE TARGET ROW is an error — but duplicate source
@@ -533,8 +547,7 @@ final class MergeBuilder private[tables] (
       val baseCounts = (probeCounts - UnchangedTag) +
         (UnchangedTag -> (totalInScope - touchedRows))
 
-      // insert side: source rows whose key matched nothing in the target.
-      // Persisted (slice-bounded): metrics and the write both consume it.
+      // insert side: source rows whose key matched nothing in the target
       val matchedKeys0 = probe.filter(col(MatchKey).isNotNull)
         .select(col(MatchKey).as(k)).distinct()
       val matchedKeys =
@@ -542,7 +555,7 @@ final class MergeBuilder private[tables] (
       val insertClauses = indexed.filter(_._1.kind == NotMatched)
       val insertAction = insertClauses.foldRight(lit(DropTag): Column) {
         case ((c, i), rest) =>
-          when(c.cond.map(expr).getOrElse(lit(true)), lit(tagFor(c, tag(i, c))))
+          when(c.cond.map(expr).getOrElse(lit(true)), lit(tagOf(c, i)))
             .otherwise(rest)
       }
       // insert values mirror insertAction's clause selection exactly
@@ -564,40 +577,19 @@ final class MergeBuilder private[tables] (
             when(c.cond.map(expr).getOrElse(lit(true)), v).otherwise(rest)
         }.as(name)
       }
-      inserts = source.alias("source")
+      val inserts = source.alias("source")
         .join(matchedKeys, Seq(k), "left_anti")
         .select(insertValueCols :+ insertAction.as(ActionCol): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // insert-clause METRICS are deferred until after the phase-2 write:
-      // the write is what first materializes the persisted `inserts`
-      // frame (the anti-join runs inside that job), so collecting counts
-      // afterwards is a cache-local scan instead of a second execution of
-      // the anti-join — one fewer full action on the commit-latency path
-      def insertCounts(): Map[String, Long] = Phase("mrg:insertCollect")(
-        inserts.groupBy(ActionCol).count().collect())
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // zero-count tags are dropped: the generic path only reports tags it
-      // observed, and `MergeMetrics.count` already resolves absent → 0
-      def counts(ic: Map[String, Long]): Map[String, Long] =
-        (baseCounts.keySet ++ ic.keySet).map(key =>
-          key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L)))
-          .toMap.filter(_._2 != 0L)
+      // insert-clause counts are observed on the written union (only insert
+      // rows carry nm*/drop tags): it is in the table's session, which runs
+      // the write and receives the metrics. The frames are deterministic,
+      // so an identity count job that runs the union first agrees.
+      val insertCounts =
+        actionCounts(insertClauses.map { case (c, i) => tagOf(c, i) } :+ DropTag)
 
       // ---- phase 2: re-resolve ONLY the touched files (deterministic
       // expressions reproduce phase 1's actions exactly) and commit them
       // plus the inserts; untouched manifest entries carry over verbatim
-      def valueFor(c: Clause, colName: String): Column = c.action match {
-        case UpdateAll | InsertAll if genAbsent(colName) =>
-          col(s"target.`$colName`") // recomputed from its rule at commit
-        case UpdateAll | InsertAll => col(s"source.`$colName`")
-        case UpdateSet(set) => set.get(colName).map(expr)
-          .getOrElse(col(s"target.`$colName`"))
-        // NotMatched clauses never fire on rewrite rows (scope is false);
-        // listed for exhaustivity with the same fill rule as the generic path
-        case InsertSet(set) => set.get(colName).map(expr)
-          .getOrElse(col(s"target.`$colName`"))
-        case Delete => col(s"target.`$colName`")
-      }
       val outCols = targetCols.map { name =>
         indexed.foldRight(col(s"target.`$name`")) { case ((c, i), rest) =>
           when(clauseCond(c), valueFor(c, name)).otherwise(rest)
@@ -674,7 +666,8 @@ final class MergeBuilder private[tables] (
           .filter(col(ActionCol) =!= UnchangedTag)
         val classic = joinTarget(readTouched(rewriteEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = classic.unionByName(images).unionByName(insertsAligned)
+        val kept = insertCounts.on(
+            classic.unionByName(images).unionByName(insertsAligned))
           .filter(col(ActionCol) =!= DropTag &&
             !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
@@ -683,17 +676,19 @@ final class MergeBuilder private[tables] (
       } else {
         val rewrite = joinTarget(readTouched(touchedEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = rewrite.unionByName(insertsAligned)
+        val kept = insertCounts.on(rewrite.unionByName(insertsAligned))
           .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
         Phase("mrg:replaceFiles")(
           table.replaceFiles(touchedPaths, kept, operationName, txn))
       }
-      MergeMetrics(counts(insertCounts()) - DropTag)
-    } finally {
-      probe.unpersist()
-      if (inserts != null) inserts.unpersist()
-    }
+      // zero-count tags are dropped, as the generic path reports them
+      val ic = insertCounts.counts()
+      val counts = (baseCounts.keySet ++ ic.keySet).map(key =>
+        key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L)))
+        .toMap.filter(_._2 != 0L)
+      MergeMetrics(counts - DropTag)
+    } finally probe.unpersist()
   }
 
   private def decodeUri(u: String): String = MergeBuilder.decodeUri(u)

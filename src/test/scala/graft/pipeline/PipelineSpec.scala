@@ -206,6 +206,13 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     run(md, 10, "s1.parquet", T1)
     writeSlice(md, e, "s2.parquet", mergeSlice(Seq((11, 99, "new"))))
     run(md, 10, "s2.parquet", T2)
+    // a merge over a small table rewrites it, possibly into one file (AQE
+    // coalesces the tiny join shuffle it writes from); a keyed-path merge
+    // of one new key then adds a second small file for the compaction
+    writeSlice(md, e, "s3.parquet", mergeSlice(Seq((12, 100, "newer"))))
+    spark.conf.set("spark.graft.merge.smallScopeBytes", "0")
+    try run(md, 10, "s3.parquet", T3)
+    finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
 
     val table = graft.tables.ManagedTable.forLocation(spark, md.silverLocation(e))
     val before = table.read().orderBy("ID").collect()

@@ -59,6 +59,39 @@ class CommitArbiterSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("atomic publish is never observed torn: a reader racing an " +
+      "overwrite loop always parses a complete pointer (posix, condput)") {
+    val base = Files.createTempDirectory("graft-arb-torn").toString
+    arbiters(new Path(base)).filter(_._1 != "rename").foreach { case (name, a) =>
+      val dir = new Path(base, name)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(dir)
+      val ptr = new Path(dir, "_current")
+      a.putAtomic(ptr, """{"version":0}""")
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      @volatile var writing = true
+      val writer = new Thread(() => {
+        var v = 1L
+        while (writing) { a.putAtomic(ptr, s"""{"version":$v}"""); v += 1 }
+      })
+      writer.start()
+      var reads = 0
+      val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+      try {
+        val until = System.nanoTime() + 1500L * 1000 * 1000
+        while (System.nanoTime() < until && failures.size < 5) {
+          try {
+            val in = fs.open(ptr)
+            val bytes = try in.readAllBytes() finally in.close()
+            json.readTree(bytes).get("version").asLong()
+          } catch { case e: Exception => failures += e.toString.take(120) }
+          reads += 1
+        }
+      } finally { writing = false; writer.join() }
+      withClue(s"arbiter $name, $reads reads:\n") { failures shouldBe empty }
+    }
+  }
+
   test("a real IO failure is NOT reported as a lost commit race: rename " +
       "and condput arbiters rethrow when the target does not exist") {
     val base = Files.createTempDirectory("graft-arb-io").toString

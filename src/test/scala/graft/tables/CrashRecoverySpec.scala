@@ -20,9 +20,9 @@ import java.nio.file.Files
   * invariant still holds.
   *
   * The WHOLE matrix runs under every commit arbiter — rename, posix,
-  * and the hostile conditional-put stand-in, whose non-atomic
-  * filesystem simulation exercises the torn-record and torn-pointer
-  * recovery paths no other arbiter can reach. */
+  * and the hostile conditional-put stand-in, whose non-atomic record
+  * create exercises the torn-record recovery path no other arbiter can
+  * reach (its pointer swap is atomic, as an object store's PUT is). */
 class CrashRecoverySpec extends AnyFunSuite with Matchers {
 
   lazy val spark: SparkSession = SparkSession.builder()
