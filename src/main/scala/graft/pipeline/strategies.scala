@@ -310,7 +310,7 @@ final class HistoricStrategy extends Strategy {
         .select(col("__mk").as(pk)).distinct()
       val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
       // the inserted count is observed by the phase-2 write job, the
-      // one action that runs the anti-join
+      // one action that runs the anti-join; the commit waits for it
       val inserted = new RowCounts(Seq("inserted" -> lit(true)))
       val inserts = inserted.on(src.alias("source")
         .join(matchedKeys, Seq(pk), "left_anti")
@@ -326,7 +326,7 @@ final class HistoricStrategy extends Strategy {
       val out = rewrite.unionByName(inserts)
         .select(explode(col("__rows")).as("__r"))
         .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
-      p.table.replaceFiles(touchedPaths, out, "merge")
+      p.table.replaceFiles(touchedPaths, out, "merge", observed = Seq(inserted))
       // identity: inserted + updated + unchanged == recordsInSlice
       ProcessingSummary(p.entity.id, "historic", recordsInSlice = n,
         inserted = inserted.counts()("inserted"),

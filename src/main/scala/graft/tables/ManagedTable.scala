@@ -148,9 +148,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val s = try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim
         finally in.close()
         if (s.nonEmpty && s.forall(_.isDigit)) return Some(s.toLong)
-        // TORN pointer: a store whose overwrite PUT is not atomic (the
-        // conditional-put arbiter on a plain filesystem) can expose an
-        // empty or truncated pointer if the writer dies mid-swap — and
+        // TORN pointer: only a store whose overwrite PUT is not atomic
+        // (every arbiter here publishes by rename on a file scheme) can
+        // expose an empty or truncated pointer if the writer dies mid-swap — and
         // unlike the absent-pointer window this never self-heals, so
         // after a few re-reads (a live writer's PUT completes in ms)
         // republish from the records, which are the ground truth
@@ -3601,7 +3601,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       df: DataFrame,
       operation: String = "replaceFiles",
       txn: Option[Txn] = None,
-      dmlRebasePredicate: Option[String] = None): Unit = withWriteLock {
+      dmlRebasePredicate: Option[String] = None,
+      observed: Seq[RowCounts] = Nil): Unit = withWriteLock {
     val m = requireManifest
     // engine-built rewrite content (merge updates, DML images): existing
     // identity values pass through, NULLs (merge inserts) allocate;
@@ -3613,8 +3614,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       recompute = true)
     val d = reconcileSchema(g, m)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles =
-      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation)
+    val newFiles = writeCommit(d, m.partitionColumns, cmx, m.constraints,
+      operation, observed = observed)
     commitReplaceWithRebase(m, logicalSchema(d).json, operation, newFiles,
       removePaths, txn, Some(cmx), propsOv, dmlRebasePredicate)
     maybeAutoCompact()
@@ -3789,7 +3790,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       replacePaths: Seq[String],
       content: DataFrame,
       operation: String = "merge",
-      txn: Option[Txn] = None): Unit = withWriteLock {
+      txn: Option[Txn] = None,
+      observed: Seq[RowCounts] = Nil): Unit = withWriteLock {
     val m = requireManifest
     // merge-built content: identity NULLs (inserts) allocate, generated
     // columns recompute (see replaceFiles)
@@ -3800,8 +3802,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val d = reconcileSchema(g, m)
     // content first: a CHECK violation then leaves no sidecar behind
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    var adds =
-      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation).toList
+    var adds = writeCommit(d, m.partitionColumns, cmx, m.constraints,
+      operation, observed = observed).toList
     if (dvUpdates.nonEmpty) {
       val name = s"dv-${UUID.randomUUID().toString}"
       val entries = dvUpdates.map(_._1)
@@ -4014,7 +4016,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       partitions: Option[Seq[Map[String, String]]],
       df: DataFrame,
       operation: String = "replacePartitions",
-      txn: Option[Txn] = None): Unit = withWriteLock {
+      txn: Option[Txn] = None,
+      observed: Seq[RowCounts] = Nil): Unit = withWriteLock {
     val m = requireManifest
     val (withIds, propsOv) =
       applyIdentity(df, m, operation, keepExisting = true)
@@ -4022,8 +4025,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       recompute = true)
     val d = reconcileSchema(g, m)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles =
-      writeCommit(d, m.partitionColumns, cmx, m.constraints, operation)
+    val newFiles = writeCommit(d, m.partitionColumns, cmx, m.constraints,
+      operation, observed = observed)
     val removed = partitions match {
       case None => m.files
       case Some(ps) =>
@@ -4798,11 +4801,15 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * check: it counts the rows violating each of `constraints` (none for
     * maintenance rewrites) and any `guards` the caller attached to parts
     * of `df`. On a violation the commit dir is deleted and the error
-    * thrown, before any commit record exists. */
+    * thrown, before any commit record exists. The caller's `observed`
+    * counts (a MERGE's action counts) are awaited in the same place, so
+    * metrics that never arrive fail the write, not a committed operation
+    * that a retry would apply twice. */
   private def writeCommit(df: DataFrame, partitionBy: Seq[String],
       cm: Option[ColumnMapping], constraints: Map[String, String],
       operation: String,
       guards: Seq[(RowCounts, String => ConstraintViolationException)] = Nil,
+      observed: Seq[RowCounts] = Nil,
       preserveLayout: Boolean = false): Seq[TableFile] = {
     val checks = new RowCounts(
       if (ConstraintExemptOps.exists(operation.startsWith)) Nil
@@ -4818,8 +4825,11 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       cm.fold(c)(_.physical(c))), commitDir, preserveLayout)
     val allChecks = (checks, (n: String) =>
       constraintViolated(n, constraints(n), operation)) +: guards
-    allChecks.iterator.flatMap { case (c, error) => c.nonZero().map(error) }
-      .nextOption().foreach { e => fs.delete(commitDir, true); throw e }
+    try {
+      observed.foreach(_.counts())
+      allChecks.iterator.flatMap { case (c, error) => c.nonZero().map(error) }
+        .nextOption().foreach(e => throw e)
+    } catch { case e: Exception => fs.delete(commitDir, true); throw e }
     // bloom sidecars ride the commit's files (one distributed pass over
     // just-written data, indexed columns only); a failed build degrades
     // to "no sidecar → file kept", so it must never fail the commit

@@ -70,10 +70,10 @@ final class MergeBuilder private[tables] (
   }
 
   /** Declare the source too large to broadcast (a backfill slice, a
-    * table-sized CDC batch): the merge then drops its broadcast and
-    * shuffle-hash hints and lets Catalyst/AQE pick a shuffle join — the
-    * target IS shuffled in exchange for not materializing the source on
-    * every executor (and not OOMing the driver building the broadcast). */
+    * table-sized CDC batch): the keyed path then drops its broadcast
+    * hints and lets Catalyst/AQE pick a shuffle join — the target IS
+    * shuffled in exchange for not materializing the source on every
+    * executor (and not OOMing the driver building the broadcast). */
   def largeSource(): this.type = { broadcastSource = false; this }
 
   /** Skip the keyed path's multi-match guard when the caller has already
@@ -302,10 +302,7 @@ final class MergeBuilder private[tables] (
       .withColumn(TFlag, lit(true))
       .withColumn(TRowId, monotonically_increasing_id())
       .alias("target")
-    // a broadcast-sized source is the build side of a shuffled hash join:
-    // the scope-sized target side is then hashed, never sorted
-    val s0 = source.withColumn(SFlag, lit(true)).alias("source")
-    val s = if (broadcastSource) s0.hint("shuffle_hash") else s0
+    val s = source.withColumn(SFlag, lit(true)).alias("source")
     val joined = t.join(s, expr(condition), "full_outer")
 
     val isMatched = col(TFlag).isNotNull && col(SFlag).isNotNull
@@ -362,7 +359,8 @@ final class MergeBuilder private[tables] (
     }
     // the action counts are observed by the write job itself: they count
     // exactly the rows written, even under a nondeterministic condition,
-    // and no job or cache exists to count. Identity allocation breaks the
+    // and no job or cache exists to count. The commit waits for them
+    // before its record is written. Identity allocation breaks the
     // one-action rule (a count and a `zipWithIndex` run over the frame
     // before its write), so on such a table the frame stays persisted and
     // is counted from the cache, which all three passes then read.
@@ -379,7 +377,7 @@ final class MergeBuilder private[tables] (
         .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
         .drop(ActionCol, TRowId)
       table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
-        kept, operationName, txn)
+        kept, operationName, txn, observed = if (identity) Nil else Seq(counted))
       MergeMetrics(cached.getOrElse(counted.counts().filter(_._2 != 0L)) - DropTag)
     } finally if (identity) written.unpersist()
   }
@@ -583,7 +581,8 @@ final class MergeBuilder private[tables] (
       // insert-clause counts are observed on the written union (only insert
       // rows carry nm*/drop tags): it is in the table's session, which runs
       // the write and receives the metrics. The frames are deterministic,
-      // so an identity count job that runs the union first agrees.
+      // so an identity count job that runs the union first agrees. The
+      // commit waits for them before its record is written.
       val insertCounts =
         actionCounts(insertClauses.map { case (c, i) => tagOf(c, i) } :+ DropTag)
 
@@ -672,7 +671,8 @@ final class MergeBuilder private[tables] (
             !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
         table.maskAndReplaceFiles(dvEntries, newDead, dropPaths,
-          rewriteEntries.map(_.path), kept, operationName, txn)
+          rewriteEntries.map(_.path), kept, operationName, txn,
+          observed = Seq(insertCounts))
       } else {
         val rewrite = joinTarget(readTouched(touchedEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
@@ -680,7 +680,8 @@ final class MergeBuilder private[tables] (
           .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
         Phase("mrg:replaceFiles")(
-          table.replaceFiles(touchedPaths, kept, operationName, txn))
+          table.replaceFiles(touchedPaths, kept, operationName, txn,
+            observed = Seq(insertCounts)))
       }
       // zero-count tags are dropped, as the generic path reports them
       val ic = insertCounts.counts()

@@ -18,14 +18,15 @@ private[graft] final class RowCounts(predicates: Seq[(String, Column)]) {
       df.observe(observation, cs.head, cs.tail: _*)
     }
 
+  /** Read once: a write waits for its counts before it commits, and its
+    * caller reads them again after the commit without waiting. */
+  private lazy val row: Row = RowCounts.observed(observation)
+
   /** Counts by name; an empty observed row reads as zeros. */
   def counts(): Map[String, Long] =
     if (predicates.isEmpty) Map.empty
-    else {
-      val row = RowCounts.observed(observation)
-      predicates.indices.map(i => predicates(i)._1 ->
-        (if (row.length == 0 || row.isNullAt(i)) 0L else row.getLong(i))).toMap
-    }
+    else predicates.indices.map(i => predicates(i)._1 ->
+      (if (row.length == 0 || row.isNullAt(i)) 0L else row.getLong(i))).toMap
 
   /** Names whose predicate matched at least one row, in declared order. */
   def nonZero(): Seq[String] = {

@@ -152,6 +152,27 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     t.currentVersion shouldBe Some(0L)
   }
 
+  test("a torn (empty or truncated) pointer is republished from the records") {
+    import org.apache.hadoop.fs.Path
+    val t = ManagedTable(spark, tmp() + "/torn-ptr")
+    t.overwriteAll(df(Seq((1, "a", "x"))))          // v0
+    t.append(df(Seq((2, "b", "y"))))                // v1
+    val fs = new Path(t.rootPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pointer = new Path(t.rootPath, "_graft/_current")
+    // what a non-atomic overwrite PUT leaves if its writer dies mid-write
+    for (content <- Seq("", "1x")) {
+      val out = fs.create(pointer, true)
+      out.write(content.getBytes("UTF-8")); out.close()
+      val t2 = ManagedTable(spark, t.rootPath)
+      t2.currentVersion shouldBe Some(1L)
+      val in = fs.open(pointer)
+      try new String(in.readAllBytes(), "UTF-8").trim shouldBe "1"
+      finally in.close()
+      t2.read().collect().map(_.getInt(0)).sorted shouldBe Array(1, 2)
+    }
+  }
+
   test("deepCloneTo: independent copy — source vacuum cannot break it") {
     val t = ManagedTable(spark, tmp() + "/dc-src")
     t.overwriteAll(df(Seq((1, "a", "x"), (2, "b", "y"))), Seq("part"))
