@@ -112,9 +112,8 @@ final class Processing(
     val partSet = if (partCols.isEmpty) Row.empty else RowCounts.observed(partObs)
     val partValues =
       if (partSet.length == 0) Nil
-      else partSet.getSeq[Row](0).map(r => partCols.zipWithIndex.map {
-        case (c, i) =>
-          c -> (if (r.isNullAt(i)) ManagedTable.NullPartitionValue else r.getString(i))
+      else partSet.getSeq[Row](0).map(r => partCols.zipWithIndex.map { case (c, i) =>
+        c -> (if (r.isNullAt(i)) ManagedTable.NullPartitionValue else r.getString(i))
       }.toMap)
     val s = DatalakeSource(df, wmValues, partCols, partValues)
     cached = Some(s)

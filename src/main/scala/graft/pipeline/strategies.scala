@@ -283,12 +283,8 @@ final class HistoricStrategy extends Strategy {
       val touchedUris = byActionFile
         .filter(r => r._1 == "updated" || r._1 == "deleted")
         .map(_._2).distinct.toSeq
-      val scopeFiles = pruned match {
-        case Some(ps) =>
-          val wanted = ps.toSet
-          manifest.files.filter(f => wanted.contains(f.partitionValues))
-        case None => manifest.files
-      }
+      val scopeFiles = pruned.map(_.toSet).fold(manifest.files)(wanted =>
+        manifest.files.filter(f => wanted.contains(f.partitionValues)))
       val lookup = p.table.fileUriLookup(scopeFiles)
       val translated = touchedUris.map(u => lookup.get(u)
         .orElse(lookup.get(graft.tables.MergeBuilder.decodeUri(u))))
@@ -329,7 +325,7 @@ final class HistoricStrategy extends Strategy {
       p.table.replaceFiles(touchedPaths, out, "merge", observed = Seq(inserted))
       // identity: inserted + updated + unchanged == recordsInSlice
       ProcessingSummary(p.entity.id, "historic", recordsInSlice = n,
-        inserted = inserted.counts()("inserted"),
+        inserted = inserted.counts("inserted"),
         updated = counts.getOrElse("updated", 0L),
         deleted = counts.getOrElse("deleted", 0L),
         unchanged = counts.getOrElse("unchanged", 0L))

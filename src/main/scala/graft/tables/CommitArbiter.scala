@@ -152,8 +152,7 @@ private[tables] final class PosixCommitArbiter(tmpDir: Path)
   * rename — the store's per-object atomicity carries the contract.
   * `putIfAbsent` maps to a conditional create (`overwrite = false`,
   * the filesystem-level equivalent of S3 `If-None-Match: *`);
-  * `putAtomic` to a plain
-  * overwrite PUT. On a real object store connector both are single
+  * `putAtomic` to a plain overwrite PUT. On a real object store both are single
   * requests and the object swap is atomic; on a local filesystem (as
   * tests run it) `putAtomic` keeps that contract with a same-directory
   * rename, while a `putIfAbsent` record could still be observed torn in

@@ -4802,9 +4802,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * maintenance rewrites) and any `guards` the caller attached to parts
     * of `df`. On a violation the commit dir is deleted and the error
     * thrown, before any commit record exists. The caller's `observed`
-    * counts (a MERGE's action counts) are awaited in the same place, so
-    * metrics that never arrive fail the write, not a committed operation
-    * that a retry would apply twice. */
+    * counts (a MERGE's) are awaited there too: counts that never arrive
+    * fail the write, not an operation a retry would apply twice. */
   private def writeCommit(df: DataFrame, partitionBy: Seq[String],
       cm: Option[ColumnMapping], constraints: Map[String, String],
       operation: String,
@@ -4826,8 +4825,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val allChecks = (checks, (n: String) =>
       constraintViolated(n, constraints(n), operation)) +: guards
     try {
-      observed.foreach(_.counts())
-      allChecks.iterator.flatMap { case (c, error) => c.nonZero().map(error) }
+      observed.foreach(_.counts)
+      allChecks.iterator.flatMap { case (c, error) =>
+        c.counts.collect { case (n, k) if k > 0 => error(n) } }
         .nextOption().foreach(e => throw e)
     } catch { case e: Exception => fs.delete(commitDir, true); throw e }
     // bloom sidecars ride the commit's files (one distributed pass over

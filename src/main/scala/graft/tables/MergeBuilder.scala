@@ -378,7 +378,7 @@ final class MergeBuilder private[tables] (
         .drop(ActionCol, TRowId)
       table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
         kept, operationName, txn, observed = if (identity) Nil else Seq(counted))
-      MergeMetrics(cached.getOrElse(counted.counts().filter(_._2 != 0L)) - DropTag)
+      MergeMetrics(cached.getOrElse(counted.counts.filter(_._2 != 0L)) - DropTag)
     } finally if (identity) written.unpersist()
   }
 
@@ -579,10 +579,9 @@ final class MergeBuilder private[tables] (
         .join(matchedKeys, Seq(k), "left_anti")
         .select(insertValueCols :+ insertAction.as(ActionCol): _*)
       // insert-clause counts are observed on the written union (only insert
-      // rows carry nm*/drop tags): it is in the table's session, which runs
-      // the write and receives the metrics. The frames are deterministic,
-      // so an identity count job that runs the union first agrees. The
-      // commit waits for them before its record is written.
+      // rows carry nm*/drop tags), which the table's session writes; the
+      // commit waits for them. The frames are deterministic, so an
+      // identity count job that runs the union first agrees.
       val insertCounts =
         actionCounts(insertClauses.map { case (c, i) => tagOf(c, i) } :+ DropTag)
 
@@ -684,11 +683,9 @@ final class MergeBuilder private[tables] (
             observed = Seq(insertCounts)))
       }
       // zero-count tags are dropped, as the generic path reports them
-      val ic = insertCounts.counts()
-      val counts = (baseCounts.keySet ++ ic.keySet).map(key =>
-        key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L)))
-        .toMap.filter(_._2 != 0L)
-      MergeMetrics(counts - DropTag)
+      val counts = insertCounts.counts.foldLeft(baseCounts) {
+        case (acc, (t, n)) => acc.updated(t, acc.getOrElse(t, 0L) + n) }
+      MergeMetrics(counts.filter(_._2 != 0L) - DropTag)
     } finally probe.unpersist()
   }
 

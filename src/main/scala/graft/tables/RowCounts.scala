@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{count, when}
 
+import scala.collection.immutable.ListMap
+
 /** Row counts taken by the job that writes a frame: [[on]] attaches one
   * `count` per named predicate, and once the action that ran the frame
   * has returned, [[counts]] reads them — no job of their own. An
@@ -18,21 +20,16 @@ private[graft] final class RowCounts(predicates: Seq[(String, Column)]) {
       df.observe(observation, cs.head, cs.tail: _*)
     }
 
-  /** Read once: a write waits for its counts before it commits, and its
-    * caller reads them again after the commit without waiting. */
-  private lazy val row: Row = RowCounts.observed(observation)
-
-  /** Counts by name; an empty observed row reads as zeros. */
-  def counts(): Map[String, Long] =
-    if (predicates.isEmpty) Map.empty
-    else predicates.indices.map(i => predicates(i)._1 ->
-      (if (row.length == 0 || row.isNullAt(i)) 0L else row.getLong(i))).toMap
-
-  /** Names whose predicate matched at least one row, in declared order. */
-  def nonZero(): Seq[String] = {
-    val c = counts()
-    predicates.map(_._1).filter(c(_) > 0)
-  }
+  /** Counts by name in declared order; an empty observed row reads as
+    * zeros. Read once: the commit waits for them, its caller reads them
+    * again after the commit. */
+  lazy val counts: ListMap[String, Long] =
+    if (predicates.isEmpty) ListMap.empty
+    else {
+      val row = RowCounts.observed(observation)
+      ListMap.from(predicates.map(_._1).zipWithIndex.map { case (n, i) =>
+        n -> (if (row.length == 0 || row.isNullAt(i)) 0L else row.getLong(i)) })
+    }
 }
 
 private[graft] object RowCounts {
