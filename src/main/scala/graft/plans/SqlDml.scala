@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftDmlShim, Row, SparkSession}
+import org.apache.spark.sql.{Column, GraftDmlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -13,6 +13,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import graft.metadata.MetadataException
 import graft.sources.GraftRelation
 import graft.tables.{ManagedTable, MergeInto}
+import graft.tables.MergeBuilder.{tagOf, Clause, ClauseKind, Delete, InsertAll,
+  InsertSet, Matched, NotMatched, NotMatchedBySource, UpdateAll, UpdateSet}
 
 /** SQL DML over managed tables — `DELETE FROM` / `UPDATE` / `MERGE INTO`
   * through `spark.sql(...)`, the way Delta exposes them (reference runs
@@ -25,7 +27,9 @@ import graft.tables.{ManagedTable, MergeInto}
   * (injected by [[graft.functions.GraftSparkExtensions]]) intercepts the
   * ANALYZED statements whose target is a graft table and swaps in
   * runnable commands over the existing DataFrame-API engine — the SQL
-  * surface adds zero new execution machinery:
+  * surface adds zero new execution machinery. Conditions and values reach
+  * the engine as `Column`s over the analyzed expressions (attributes
+  * rebound by name), never as SQL text to parse again:
   *
   *  - `DELETE FROM t WHERE c`        → [[ManagedTable.delete]]
   *    (file-granular rewrite; partition-only predicates are
@@ -47,8 +51,7 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     case d: DeleteFromTable if d.childrenResolved =>
       graftTarget(d.table) match {
         case Some((p, cat)) =>
-          val (text, views) = condWithSubqueries(d.condition, "DELETE")
-          GraftDeleteCommand(p, text, cat, views)
+          GraftDeleteCommand(p, condColumn(d.condition, "DELETE"), cat)
         case None => plan
       }
     case u: UpdateTable if u.childrenResolved =>
@@ -56,12 +59,10 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         case Some((p, cat)) =>
           u.assignments.foreach(a => rejectSubqueries(a.value,
             "UPDATE SET values over a graft table"))
-          val (text, views) = u.condition
-            .map(condWithSubqueries(_, "UPDATE"))
-            .getOrElse(("true", Nil))
           GraftUpdateCommand(p,
-            u.assignments.map(a => assignName(a.key) -> plainSql(a.value)).toMap,
-            text, cat, views)
+            u.assignments.map(a => assignName(a.key) -> plainColumn(a.value)).toMap,
+            u.condition.fold(org.apache.spark.sql.functions.lit(true))(
+              condColumn(_, "UPDATE")), cat)
         case None => plan
       }
     case m: MergeIntoTable if m.childrenResolved =>
@@ -113,9 +114,8 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
       catalog: Option[String]): LogicalPlan = {
     val tgt = m.targetTable.outputSet
     val src = m.sourceTable.outputSet
-    def qual(e: Expression): String = qualSql(e, tgt, src)
-    def qualOpt(e: Option[Expression]): Option[String] = e.map(qual)
-    def setMap(as: Seq[Assignment]): Map[String, String] =
+    def qual(e: Expression): Column = qualColumn(e, tgt, src)
+    def setMap(as: Seq[Assignment]): Map[String, Column] =
       as.map(a => assignName(a.key) -> qual(a.value)).toMap
     // the analyzer expands `INSERT *` / `UPDATE SET *` against the
     // PRE-EVOLUTION target schema: same-named source attributes covering
@@ -145,35 +145,30 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         case _ => false
       })
     }
-    def clause(kind: Char)(a: MergeAction): DmlMergeClause = a match {
-      case UpdateStarAction(c) if kind == 'm' => MatchedUpdateAll(qualOpt(c))
-      // the analyzer expands UPDATE SET * into per-column assignments
-      // with fromStar = true — keep the updateAll fast form for those
-      case UpdateAction(c, _, true) if kind == 'm' =>
-        MatchedUpdateAll(qualOpt(c))
-      case UpdateAction(c, as, _) if kind == 'm' =>
-        MatchedUpdate(setMap(as), qualOpt(c))
-      case DeleteAction(c) if kind == 'm' => MatchedDelete(qualOpt(c))
-      case InsertStarAction(c) if kind == 'i' => NotMatchedInsertAll(qualOpt(c))
-      case InsertAction(c, as)
-          if kind == 'i' && m.withSchemaEvolution && starLike(as) =>
-        NotMatchedInsertAll(qualOpt(c))
-      case InsertAction(c, as) if kind == 'i' =>
-        NotMatchedInsert(setMap(as), qualOpt(c))
-      case UpdateAction(c, as, _) if kind == 's' =>
-        BySourceUpdate(setMap(as), qualOpt(c))
-      case DeleteAction(c) if kind == 's' => BySourceDelete(qualOpt(c))
-      case other => throw new MetadataException(
-        s"MERGE INTO graft table: unsupported action $other")
-    }
+    def clause(kind: ClauseKind)(a: MergeAction): Clause =
+      Clause(kind, a.condition.map(qual), (kind, a) match {
+        case (Matched, _: UpdateStarAction) => UpdateAll
+        // the analyzer expands UPDATE SET * into per-column assignments
+        // with fromStar = true — keep the updateAll fast form for those
+        case (Matched, UpdateAction(_, _, true)) => UpdateAll
+        case (Matched | NotMatchedBySource, UpdateAction(_, as, _)) =>
+          UpdateSet(setMap(as))
+        case (Matched | NotMatchedBySource, _: DeleteAction) => Delete
+        case (NotMatched, _: InsertStarAction) => InsertAll
+        case (NotMatched, InsertAction(_, as))
+            if m.withSchemaEvolution && starLike(as) => InsertAll
+        case (NotMatched, InsertAction(_, as)) => InsertSet(setMap(as))
+        case _ => throw new MetadataException(
+          s"MERGE INTO graft table: unsupported action $a")
+      })
     rejectSubqueries(m.mergeCondition, "MERGE INTO graft table: ON condition")
     (m.matchedActions ++ m.notMatchedActions ++ m.notMatchedBySourceActions)
       .foreach(a => a.children.foreach(rejectSubqueries(_,
         "MERGE INTO graft table: clause")))
     val clauses =
-      m.matchedActions.map(clause('m')) ++
-        m.notMatchedActions.map(clause('i')) ++
-        m.notMatchedBySourceActions.map(clause('s'))
+      m.matchedActions.map(clause(Matched)) ++
+        m.notMatchedActions.map(clause(NotMatched)) ++
+        m.notMatchedBySourceActions.map(clause(NotMatchedBySource))
     GraftMergeCommand(path, m.sourceTable, equiKey(m.mergeCondition, tgt, src),
       qual(m.mergeCondition), clauses, m.withSchemaEvolution, catalog)
   }
@@ -318,7 +313,7 @@ class GraftTimeTravelRule(session: SparkSession) extends Rule[LogicalPlan] {
                 ct.identifier.database.map(d => s"$d.${ct.identifier.table}")
                   .getOrElse(ct.identifier.table))
             SqlDml.GraftReplaceWhereCommand(path,
-              SqlDml.plainSql(o.deleteExpr), o.query, cat)
+              SqlDml.plainColumn(o.deleteExpr), o.query, cat)
           case None => o
         }
       case _ => o
@@ -438,79 +433,37 @@ object SqlDml {
     case _ => None
   }
 
-  /** Single-table predicate/value → SQL over the table's own columns —
-    * resolved attributes drop their catalog qualifier (`db.t.id` would
-    * not resolve against the managed table's own frame). */
-  private[plans] def plainSql(e: Expression): String =
-    e.transform {
+  /** Single-table predicate/value → Column over the table's own columns:
+    * resolved attributes are rebound by name, dropping their catalog
+    * qualifier (`db.t.id` would not resolve against the managed table's
+    * own frame). Everything else — functions, lambdas, uncorrelated
+    * subqueries with their analyzed plans — is handed over as analyzed. */
+  private[plans] def plainColumn(e: Expression): Column =
+    GraftDmlShim.column(e.transform {
       case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
-    }.sql
+    })
 
-  /** DML condition → (SQL text, named subquery plans). `Expression.sql`
-    * cannot round-trip a subquery (an analyzed `ListQuery` renders as an
-    * unparseable `listquery(...)` call), so each subquery expression is
-    * swapped for a unique marker literal, the remainder rendered by
-    * [[plainSql]], and the markers spliced back as `(SELECT * FROM
-    * <view>)` — the command registers each named ANALYZED plan as a temp
-    * view at run time and the engine's own DML machinery evaluates the
-    * predicate unchanged (Spark resolves subqueries inside DataFrame
-    * filters). `NOT IN` arrives as `Not(InSubquery)` and keeps its
-    * three-valued-null semantics through the `NOT (… IN (…))` rendering.
-    * Correlated subqueries are rejected — Delta's DML contract
-    * (uncorrelated only), and the right call at scale: a correlated
-    * probe per candidate row is a hidden join the user should write as
-    * MERGE instead. */
-  private[plans] def condWithSubqueries(e: Expression, op: String):
-      (String, Seq[(String, LogicalPlan)]) = {
-    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery,
-      ListQuery, Literal, ScalarSubquery, SubqueryExpression}
-    if (!e.exists(_.isInstanceOf[SubqueryExpression]))
-      return (plainSql(e), Nil)
-    var views = Vector.empty[(String, LogicalPlan)]
-    var spliced = Map.empty[String, String]
-    def fresh(plan: LogicalPlan, outer: Seq[Expression],
-        render: String => String): Expression = {
-      if (outer.nonEmpty) throw new MetadataException(
-        s"$op over a graft table: only uncorrelated subqueries are " +
-          "supported in the condition (rewrite a correlated probe as " +
-          "MERGE INTO)")
-      val name = "graft_subq_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      views :+= name -> plan
-      val marker = s"__GRAFT_SUBQ_${name}__"
-      spliced += s"'$marker'" -> render(name)
-      Literal(marker)
-    }
-    // top-down: a replaced subquery's internals are never revisited, so
-    // the bare ListQuery inside an InSubquery cannot trip the leftover
-    // check below
-    val replaced = e.transformDown {
-      case InSubquery(values, l: ListQuery) =>
-        val vals = values.map(plainSql).mkString(", ")
-        fresh(l.plan, l.outerAttrs, n => s"(($vals) IN (SELECT * FROM $n))")
-      case x: Exists =>
-        fresh(x.plan, x.outerAttrs, n => s"(EXISTS (SELECT * FROM $n))")
-      case s: ScalarSubquery =>
-        fresh(s.plan, s.outerAttrs, n => s"((SELECT * FROM $n))")
-    }
-    replaced.foreach {
-      case leftover: SubqueryExpression => throw new MetadataException(
-        s"$op over a graft table: unsupported subquery form " +
-          s"${leftover.getClass.getSimpleName} in the condition")
-      case _ => ()
-    }
-    val text = spliced.foldLeft(plainSql(replaced)) {
-      case (t, (marker, sql)) => t.replace(marker, sql)
-    }
-    (text, views)
+  /** DML condition → Column ([[plainColumn]]). Uncorrelated `IN` / `NOT
+    * IN` / `EXISTS` / scalar subqueries keep their analyzed plans, and the
+    * engine's own DML machinery evaluates them inside its DataFrame
+    * filters (`NOT IN` keeps its three-valued-null semantics). Correlated
+    * subqueries are rejected: their outer references point at attribute
+    * ids this rebinding drops. That is also Delta's DML contract
+    * (uncorrelated only), and the right call at scale: a correlated probe
+    * per candidate row is a hidden join the user should write as MERGE
+    * instead. */
+  private[plans] def condColumn(e: Expression, op: String): Column = {
+    if (SubqueryExpression.hasCorrelatedSubquery(e)) throw new MetadataException(
+      s"$op over a graft table: only uncorrelated subqueries are " +
+        "supported in the condition (rewrite a correlated probe as " +
+        "MERGE INTO)")
+    plainColumn(e)
   }
 
-  /** Loud rejection for positions where a subquery cannot be routed into
-    * the string-predicate engine (SET values, MERGE conditions — the
-    * same positions Delta rejects). */
+  /** Loud rejection for positions where a subquery is not supported
+    * (SET values, MERGE conditions — the same positions Delta rejects). */
   private[plans] def rejectSubqueries(e: Expression, what: String): Unit =
-    if (e.exists(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
+    if (SubqueryExpression.hasSubquery(e))
       throw new MetadataException(s"$what: subqueries are not supported here")
 
   /** Assignment key → bare column name (nested fields unsupported —
@@ -522,17 +475,17 @@ object SqlDml {
         "(only top-level columns)")
   }
 
-  /** Two-sided expression → SQL over the merge builder's `target.` /
-    * `source.` aliases: each resolved attribute is rewritten to its
-    * side's canonical prefix (whatever alias the statement used). */
-  private[plans] def qualSql(e: Expression,
-      tgt: AttributeSet, src: AttributeSet): String =
-    e.transform {
+  /** Two-sided expression → Column over the merge builder's `target.` /
+    * `source.` aliases: each resolved attribute is rebound to its side's
+    * canonical prefix (whatever alias the statement used). */
+  private[plans] def qualColumn(e: Expression,
+      tgt: AttributeSet, src: AttributeSet): Column =
+    GraftDmlShim.column(e.transform {
       case a: AttributeReference if tgt.contains(a) =>
         UnresolvedAttribute(Seq("target", a.name))
       case a: AttributeReference if src.contains(a) =>
         UnresolvedAttribute(Seq("source", a.name))
-    }.sql
+    })
 
   /** `ON target.k = source.k` (one column, same name both sides) → that
     * key: the merge takes the keyed file-granular path that never
@@ -559,48 +512,28 @@ object SqlDml {
     t
   }
 
-  /** Register the condition's subquery plans as temp views for the span
-    * of the DML body (the spliced `(SELECT * FROM <view>)` text resolves
-    * against them), dropping them afterwards. */
-  private def withSubqueryViews[T](session: SparkSession,
-      views: Seq[(String, LogicalPlan)])(body: => T): T = {
-    views.foreach { case (name, plan) =>
-      GraftDmlShim.ofRows(session, plan).createOrReplaceTempView(name)
-    }
-    try body
-    finally views.foreach { case (name, _) =>
-      session.catalog.dropTempView(name)
-    }
-  }
-
-  final case class GraftDeleteCommand(path: String, cond: String,
-      catalog: Option[String] = None,
-      subqueryViews: Seq[(String, LogicalPlan)] = Nil)
+  final case class GraftDeleteCommand(path: String, cond: Column,
+      catalog: Option[String] = None)
       extends LeafRunnableCommand {
     override val output: Seq[Attribute] = metricAttrs("num_affected_rows")
     override def run(session: SparkSession): Seq[Row] =
-      withSubqueryViews(session, subqueryViews) {
-        Seq(Row(tableFor(session, path, catalog).delete(cond)))
-      }
+      Seq(Row(tableFor(session, path, catalog).delete(cond)))
   }
 
   final case class GraftUpdateCommand(
-      path: String, set: Map[String, String], cond: String,
-      catalog: Option[String] = None,
-      subqueryViews: Seq[(String, LogicalPlan)] = Nil)
+      path: String, set: Map[String, Column], cond: Column,
+      catalog: Option[String] = None)
       extends LeafRunnableCommand {
     override val output: Seq[Attribute] = metricAttrs("num_affected_rows")
     override def run(session: SparkSession): Seq[Row] =
-      withSubqueryViews(session, subqueryViews) {
-        Seq(Row(tableFor(session, path, catalog).update(set, cond)))
-      }
+      Seq(Row(tableFor(session, path, catalog).update(set, cond)))
   }
 
   /** `INSERT INTO … REPLACE WHERE` → predicate-scoped overwrite. The
     * source plan stays a FIELD (not a child): for the path-escape form
     * it arrives unresolved from the hint phase, and `ofRows` analyzes
     * it at run time — the same rehydration [[GraftMergeCommand]] uses. */
-  final case class GraftReplaceWhereCommand(path: String, cond: String,
+  final case class GraftReplaceWhereCommand(path: String, cond: Column,
       source: LogicalPlan, catalog: Option[String] = None)
       extends LeafRunnableCommand {
     override def run(session: SparkSession): Seq[Row] = {
@@ -800,12 +733,11 @@ object SqlDml {
       val df = withStatics.select(m.schema.fields.toSeq.map(f =>
         org.apache.spark.sql.functions.col(s"`${f.name}`")): _*)
       if (!overwrite) t.append(df)
-      else if (static.size == spec.size) {
-        val cond = static.map { case (k, v) =>
-          s"`$k` = '${v.replace("'", "''")}'"
-        }.mkString(" AND ")
-        t.overwriteWhere(df, cond)
-      } else t.overwriteDynamic(df, m.partitionColumns)
+      else if (static.size == spec.size)
+        t.overwriteWhere(df, static.map { case (k, v) =>
+          org.apache.spark.sql.functions.col(s"`$k`") === v
+        }.reduce(_ && _))
+      else t.overwriteDynamic(df, m.partitionColumns)
       Nil
     }
   }
@@ -916,29 +848,16 @@ object SqlDml {
     }
   }
 
-  sealed trait DmlMergeClause
-  final case class MatchedUpdateAll(cond: Option[String]) extends DmlMergeClause
-  final case class MatchedUpdate(set: Map[String, String],
-      cond: Option[String]) extends DmlMergeClause
-  final case class MatchedDelete(cond: Option[String]) extends DmlMergeClause
-  final case class NotMatchedInsertAll(cond: Option[String]) extends DmlMergeClause
-  final case class NotMatchedInsert(set: Map[String, String],
-      cond: Option[String]) extends DmlMergeClause
-  final case class BySourceUpdate(set: Map[String, String],
-      cond: Option[String]) extends DmlMergeClause
-  final case class BySourceDelete(cond: Option[String]) extends DmlMergeClause
-
   /** MERGE over the builder; `source` is the statement's analyzed source
     * plan, rehydrated at run time. The metric row splits affected rows
     * the way Delta's MERGE output does, summed from the builder's
-    * per-clause counts (clause `i` in declaration order tags `m i` /
-    * `nm i` / `bs i`). */
+    * per-clause counts by each clause's action. */
   final case class GraftMergeCommand(
       path: String,
       source: LogicalPlan,
       key: Option[String],
-      cond: String,
-      clauses: Seq[DmlMergeClause],
+      cond: Column,
+      clauses: Seq[Clause],
       schemaEvolution: Boolean,
       catalog: Option[String] = None)
       extends LeafRunnableCommand {
@@ -952,30 +871,14 @@ object SqlDml {
         case None => MergeInto(t, srcDf, cond)
       }
       if (schemaEvolution) b.withSchemaEvolution()
-      clauses.foreach {
-        case MatchedUpdateAll(c) => b.whenMatchedUpdateAll(c)
-        case MatchedUpdate(s, c) => b.whenMatchedUpdate(s, c)
-        case MatchedDelete(c) => b.whenMatchedDelete(c)
-        case NotMatchedInsertAll(c) => b.whenNotMatchedInsertAll(c)
-        case NotMatchedInsert(s, c) => b.whenNotMatchedInsert(s, c)
-        case BySourceUpdate(s, c) => b.whenNotMatchedBySourceUpdate(s, c)
-        case BySourceDelete(c) => b.whenNotMatchedBySourceDelete(c)
-      }
+      clauses.foreach(b.add)
       val metrics = b.execute()
-      def sum(sel: (DmlMergeClause, Int) => Boolean): Long =
-        clauses.zipWithIndex.collect {
-          case (c, i) if sel(c, i) => metrics.count(c match {
-            case _: NotMatchedInsertAll | _: NotMatchedInsert => s"nm$i"
-            case _: BySourceUpdate | _: BySourceDelete => s"bs$i"
-            case _ => s"m$i"
-          })
-        }.sum
-      val updated = sum((c, _) => c.isInstanceOf[MatchedUpdateAll] ||
-        c.isInstanceOf[MatchedUpdate] || c.isInstanceOf[BySourceUpdate])
-      val deleted = sum((c, _) => c.isInstanceOf[MatchedDelete] ||
-        c.isInstanceOf[BySourceDelete])
-      val inserted = sum((c, _) => c.isInstanceOf[NotMatchedInsertAll] ||
-        c.isInstanceOf[NotMatchedInsert])
+      val counts = clauses.zipWithIndex.map { case (c, i) =>
+        c.action -> metrics.byTag.getOrElse(tagOf(c, i), 0L) }
+      val deleted = counts.collect { case (Delete, n) => n }.sum
+      val inserted = counts.collect {
+        case (InsertAll | _: InsertSet, n) => n }.sum
+      val updated = counts.map(_._2).sum - deleted - inserted
       Seq(Row(updated + deleted + inserted, updated, deleted, inserted))
     }
   }

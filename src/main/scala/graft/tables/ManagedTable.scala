@@ -2021,22 +2021,21 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * matching rows with a narrow predicate-column scan and rewrites only
     * those, keeping their non-matching rows; untouched entries carry
     * over verbatim. */
-  def overwriteWhere(df: DataFrame, condition: String): Unit = withWriteLock {
+  def overwriteWhere(df: DataFrame, condition: Column): Unit = withWriteLock {
     if (exists) requireNotAppendOnly("overwriteWhere")
+    val pred = coalesce(condition, lit(false))
     manifest match {
       case None =>
         // same membership constraint as the existing-table branch: a row
         // outside the replaced region would be silently inserted now and
         // silently DROPPED by the next replace of that region (Delta's
         // replaceWhere enforces this on first write too)
-        val pred0 = coalesce(expr(condition), lit(false))
-        if (df.filter(!pred0).limit(1).count() > 0)
+        if (df.filter(!pred).limit(1).count() > 0)
           throw new ConstraintViolationException(
             s"replaceWhere on $rootPath: inserted rows do not all match " +
               s"'$condition' — they would fall outside the replaced region")
         overwriteAll(df, Nil, "replaceWhere")
       case Some(m) =>
-        val pred = coalesce(expr(condition), lit(false))
         val (withIds, propsOv) =
           applyIdentity(df, m, "replaceWhere", keepExisting = false)
         val g = applyGenerated(withIds, m.generated, Some(m.schema),
@@ -2094,6 +2093,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         maybeAutoCompact()
     }
   }
+
+  /** [[overwriteWhere]] with the condition as Spark SQL text. */
+  def overwriteWhere(df: DataFrame, condition: String): Unit =
+    overwriteWhere(df, expr(condition))
 
   /** Atomic "append, creating the table if absent": the exists-check runs
     * INSIDE the write lock, so two concurrent first-writers serialize into
@@ -2181,10 +2184,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         maybeAutoAnalyzeNdv()
     } }
 
-  /** Snapshot restricted to exactly `files` (entries of `m`) — the
-    * file-granular read half of a MERGE/Historic rewrite. */
-  /** DELETE FROM this table WHERE `condition` (Spark SQL over the table's
-    * columns). Returns the number of rows deleted.
+  /** DELETE FROM this table WHERE `condition` (a `Column` over the
+    * table's columns). Returns the number of rows deleted.
     *
     * File-granular, like the keyed MERGE: one narrow touch-detect pass
     * finds the files containing matching rows (the predicate and its
@@ -2196,18 +2197,21 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     *
     * SQL three-valued logic: rows where the condition evaluates NULL are
     * KEPT (DELETE removes rows where the predicate is TRUE). */
-  def delete(condition: String): Long = withWriteLock {
+  def delete(condition: Column): Long = withWriteLock {
     requireNotAppendOnly("DELETE")
     dmlRewrite("delete", condition)((rows, pred) => rows.filter(!pred))
   }
 
+  /** [[delete]] with the condition as Spark SQL text. */
+  def delete(condition: String): Long = delete(expr(condition))
+
   /** UPDATE this table SET `set` WHERE `condition`. `set` maps column
-    * name → Spark SQL expression over the table's columns (evaluated on
-    * the pre-update row, standard UPDATE semantics); values are cast to
-    * the column's declared type so the table schema never drifts.
-    * Returns the number of rows updated. Same file-granular rewrite
-    * shape as [[delete]]. */
-  def update(set: Map[String, String], condition: String = "true"): Long =
+    * name → expression over the table's columns (evaluated on the
+    * pre-update row, standard UPDATE semantics); values are cast to the
+    * column's declared type so the table schema never drifts. Returns
+    * the number of rows updated. Same file-granular rewrite shape as
+    * [[delete]]. */
+  def update(set: Map[String, Column], condition: Column): Long =
     withWriteLock {
       requireNotAppendOnly("UPDATE")
       val m = requireManifest
@@ -2226,7 +2230,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val cols = m.schema.fields.toSeq.map { f =>
           set.get(f.name) match {
             case Some(e) =>
-              when(pred, expr(e).cast(f.dataType))
+              when(pred, e.cast(f.dataType))
                 .otherwise(col(s"`${f.name}`")).as(f.name)
             case None => col(s"`${f.name}`")
           }
@@ -2244,6 +2248,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         touchedRows.select(cols ++ carry: _*)
       }
     }
+
+  /** [[update]] with the values and the condition as Spark SQL text. */
+  def update(set: Map[String, String], condition: String = "true"): Long =
+    update(set.map { case (k, v) => k -> expr(v) }, expr(condition))
 
   /** FSCK (Delta's `FSCK REPAIR TABLE`): drop manifest references to
     * data files that no longer exist on storage (deleted out-of-band —
@@ -2299,7 +2307,24 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     rows
   }
 
-  /** Manifest-side candidate pruning for an arbitrary SQL condition —
+  /** `condition` analyzed against `m`'s schema (a filter over an empty
+    * frame: analysis only, no job), split into its top-level conjuncts —
+    * the shape the DML pruners below inspect. */
+  private def analyzedConjuncts(m: Manifest, condition: Column):
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case x => Seq(x)
+    }
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+      .filter(condition).queryExecution.analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          split(f.condition)
+      }.flatten
+  }
+
+  /** Manifest-side candidate pruning for an arbitrary condition —
     * the DML twin of the `format("graft")` scan's pushed-filter pruning:
     * each translatable top-level conjunct prunes through the same
     * machinery (driver-side partition evaluation, per-file min/max
@@ -2311,20 +2336,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * table into a scan of the handful of overlapping files instead of
     * the table. */
   private[graft] def statsPrunedFiles(
-      m: Manifest, condition: String): Seq[TableFile] =
+      m: Manifest, condition: Column): Seq[TableFile] =
     try {
-      import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      def split(e: Expression): Seq[Expression] = e match {
-        case CAnd(l, r) => split(l) ++ split(r)
-        case x => Seq(x)
-      }
-      val conj: Seq[Expression] = empty.filter(expr(condition))
-        .queryExecution.analyzed.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            split(f.condition)
-        }.flatten
+      val conj = analyzedConjuncts(m, condition)
       // translate exactly the shapes the pruner exploits (=, IN, ranges
       // on a column vs literal); everything else contributes no pruning.
       // The ANALYZED plan (the optimizer would fold the whole filter away
@@ -2387,11 +2401,11 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * (`rewrite(touchedRows, pred)` produces their replacement content),
     * commit with untouched entries carried verbatim. Returns the
     * matched-row count. */
-  private def dmlRewrite(op: String, condition: String)(
-      rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Long =
+  private def dmlRewrite(op: String, condition: Column)(
+      rewrite: (DataFrame, Column) => DataFrame): Long =
     withWriteLock {
     val m = requireManifest
-    val pred = coalesce(expr(condition), lit(false))
+    val pred = coalesce(condition, lit(false))
     if (m.files.isEmpty) return 0L
 
     // a condition over PARTITION columns alone is decidable per file on
@@ -3470,16 +3484,10 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * Cost: analysis of the condition plus one tiny local job over the
     * distinct partition tuples, never the table. */
   private def partitionOnlyMatches(
-      m: Manifest, condition: String): Option[Seq[TableFile]] = {
+      m: Manifest, condition: Column): Option[Seq[TableFile]] = {
     if (m.partitionColumns.isEmpty) return None
-    val refs: Set[String] = {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      empty.filter(expr(condition)).queryExecution.analyzed.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.references.toSeq.map(_.name)
-      }.flatten.toSet
-    }
+    val refs: Set[String] =
+      analyzedConjuncts(m, condition).flatMap(_.references.map(_.name)).toSet
     if (refs.isEmpty || !refs.subsetOf(m.partitionColumns.toSet)) return None
     val tuples = m.files.map(_.partitionValues).distinct
     if (tuples.exists(t => m.partitionColumns.exists(c =>
@@ -3498,7 +3506,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     val pdf = spark.createDataFrame(rows.asJava, strSchema)
       .select(m.partitionColumns.map(c =>
         col(s"`$c`").cast(m.schema(c).dataType).as(c)) :+ col("__g_idx"): _*)
-    val hit = pdf.filter(expr(condition)).select("__g_idx")
+    val hit = pdf.filter(condition).select("__g_idx")
       .collect().map(_.getLong(0).toInt).toSet
     val wanted: Set[Map[String, String]] = hit.map(tuples(_))
     Some(m.files.filter(f => wanted.contains(f.partitionValues)))
@@ -3601,7 +3609,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       df: DataFrame,
       operation: String = "replaceFiles",
       txn: Option[Txn] = None,
-      dmlRebasePredicate: Option[String] = None,
+      dmlRebasePredicate: Option[Column] = None,
       observed: Seq[RowCounts] = Nil): Unit = withWriteLock {
     val m = requireManifest
     // engine-built rewrite content (merge updates, DML images): existing
@@ -3633,7 +3641,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       newFiles: Seq[TableFile], removePaths: Seq[String], txn: Option[Txn],
       mappingOverride: Option[Option[ColumnMapping]],
       propsOv: Option[Map[String, String]],
-      rebasePredicate: Option[String]): Unit = {
+      rebasePredicate: Option[Column]): Unit = {
     def dropWritten(): Unit =
       try newFiles.headOption.foreach { f =>
         val segs = f.path.split('/')
@@ -4249,7 +4257,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * non-partition column is an error, not a full-table surprise. */
   private def maintenanceScope(m: Manifest, where: String): Seq[TableFile] =
     if (where.trim.isEmpty) m.files
-    else partitionOnlyMatches(m, where).getOrElse(
+    else partitionOnlyMatches(m, expr(where)).getOrElse(
       throw new MetadataException(
         s"maintenance WHERE on $rootPath must reference partition columns " +
           s"only (got: $where)"))

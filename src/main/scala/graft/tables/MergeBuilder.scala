@@ -33,13 +33,16 @@ import org.apache.spark.storage.StorageLevel
   * containing clause-touched rows are rewritten; nothing table-sized is
   * ever persisted.
   *
-  * Conditions and set-expressions are Spark SQL strings over `target.` /
-  * `source.` aliases, exactly like Delta's API.
+  * Conditions and set-expressions are `Column`s over the `target.` /
+  * `source.` aliases, as Delta's builder takes them. The public `String`
+  * methods parse their Spark SQL once, when the clause is added; the SQL
+  * `MERGE INTO` surface hands its analyzed expressions over as `Column`s
+  * directly (`graft.plans.SqlDml`).
   */
 final class MergeBuilder private[tables] (
     table: ManagedTable,
     source: DataFrame,
-    condition: String,
+    condition: Column,
     keyColumn: Option[String] = None) {
 
   import MergeBuilder._
@@ -125,25 +128,29 @@ final class MergeBuilder private[tables] (
   }
 
   def whenMatchedUpdateAll(cond: Option[String] = None): this.type =
-    add(Clause(Matched, cond, UpdateAll))
+    add(Clause(Matched, cond.map(expr), UpdateAll))
   def whenMatchedUpdate(set: Map[String, String], cond: Option[String] = None): this.type =
-    add(Clause(Matched, cond, UpdateSet(set)))
+    add(Clause(Matched, cond.map(expr), UpdateSet(exprs(set))))
   def whenMatchedDelete(cond: Option[String] = None): this.type =
-    add(Clause(Matched, cond, Delete))
+    add(Clause(Matched, cond.map(expr), Delete))
   def whenNotMatchedInsertAll(cond: Option[String] = None): this.type =
-    add(Clause(NotMatched, cond, InsertAll))
+    add(Clause(NotMatched, cond.map(expr), InsertAll))
   /** Insert with explicit per-column expressions over `source.`; target
     * columns absent from `set` insert NULL (Delta's insert(set)
     * semantics). */
   def whenNotMatchedInsert(set: Map[String, String], cond: Option[String] = None): this.type =
-    add(Clause(NotMatched, cond, InsertSet(set)))
+    add(Clause(NotMatched, cond.map(expr), InsertSet(exprs(set))))
   def whenNotMatchedBySourceUpdate(
       set: Map[String, String], cond: Option[String] = None): this.type =
-    add(Clause(NotMatchedBySource, cond, UpdateSet(set)))
+    add(Clause(NotMatchedBySource, cond.map(expr), UpdateSet(exprs(set))))
   def whenNotMatchedBySourceDelete(cond: Option[String] = None): this.type =
-    add(Clause(NotMatchedBySource, cond, Delete))
+    add(Clause(NotMatchedBySource, cond.map(expr), Delete))
 
-  private def add(c: Clause): this.type = { clauses :+= c; this }
+  private def exprs(set: Map[String, String]): Map[String, Column] =
+    set.map { case (k, v) => k -> expr(v) }
+
+  /** Append a clause built from `Column`s (the SQL surface's form). */
+  private[graft] def add(c: Clause): this.type = { clauses :+= c; this }
 
   /** Run the merge; returns per-action row counts keyed by clause index
     * (`m0`, `nm1`, `bs0`, …) plus `unchanged` (rows no clause touched).
@@ -220,8 +227,8 @@ final class MergeBuilder private[tables] (
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
         .withColumn(TFlag, lit(true)).alias("target")
       val s = source.limit(0).withColumn(SFlag, lit(true)).alias("source")
-      t.join(s, expr(condition), "left_outer")
-        .select(conds.map(c => expr(c)): _*)
+      t.join(s, condition, "left_outer")
+        .select(conds: _*)
         .queryExecution.analyzed.expressions.forall(_.deterministic)
     }
   }
@@ -303,7 +310,7 @@ final class MergeBuilder private[tables] (
       .withColumn(TRowId, monotonically_increasing_id())
       .alias("target")
     val s = source.withColumn(SFlag, lit(true)).alias("source")
-    val joined = t.join(s, expr(condition), "full_outer")
+    val joined = t.join(s, condition, "full_outer")
 
     val isMatched = col(TFlag).isNotNull && col(SFlag).isNotNull
     val sourceOnly = col(SFlag).isNotNull && col(TFlag).isNull
@@ -315,7 +322,7 @@ final class MergeBuilder private[tables] (
       case NotMatchedBySource => targetOnly
     }
     def clauseCond(c: Clause): Column =
-      c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
+      c.cond.map(scope(c.kind) && _).getOrElse(scope(c.kind))
 
     val indexed = clauses.zipWithIndex
     // action tag: first clause whose scope+condition holds; else keep/drop
@@ -386,25 +393,14 @@ final class MergeBuilder private[tables] (
   private def actionCounts(tags: Seq[String]): RowCounts =
     new RowCounts(tags.map(t => t -> (col(ActionCol) === t)))
 
-  /** Clause `i`'s action tag: `m<i>`, `nm<i>` or `bs<i>` by kind,
-    * `del:`-prefixed for a delete. */
-  private def tagOf(c: Clause, i: Int): String = {
-    val base = c.kind match {
-      case Matched            => s"m$i"
-      case NotMatched         => s"nm$i"
-      case NotMatchedBySource => s"bs$i"
-    }
-    if (c.action == Delete) DeletePrefix + base else base
-  }
-
   /** Column `colName`'s value under clause `c`. `target.*` (NULL on a
     * not-matched row) stands in for columns an insert(set) leaves unset and
     * for source-absent generated/identity columns the commit fills. */
   private def valueFor(c: Clause, colName: String): Column = c.action match {
     case UpdateAll | InsertAll if genAbsent(colName) => col(s"target.`$colName`")
     case UpdateAll | InsertAll => col(s"source.`$colName`")
-    case UpdateSet(set) => set.get(colName).map(expr).getOrElse(col(s"target.`$colName`"))
-    case InsertSet(set) => set.get(colName).map(expr).getOrElse(col(s"target.`$colName`"))
+    case UpdateSet(set) => set.getOrElse(colName, col(s"target.`$colName`"))
+    case InsertSet(set) => set.getOrElse(colName, col(s"target.`$colName`"))
     case Delete => col(s"target.`$colName`")
   }
 
@@ -461,7 +457,7 @@ final class MergeBuilder private[tables] (
       case NotMatchedBySource => targetOnly
     }
     def clauseCond(c: Clause): Column =
-      c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
+      c.cond.map(scope(c.kind) && _).getOrElse(scope(c.kind))
 
     val indexed = clauses.zipWithIndex
     val actionCol = indexed.foldRight(lit(UnchangedTag): Column) {
@@ -553,7 +549,7 @@ final class MergeBuilder private[tables] (
       val insertClauses = indexed.filter(_._1.kind == NotMatched)
       val insertAction = insertClauses.foldRight(lit(DropTag): Column) {
         case ((c, i), rest) =>
-          when(c.cond.map(expr).getOrElse(lit(true)), lit(tagOf(c, i)))
+          when(c.cond.getOrElse(lit(true)), lit(tagOf(c, i)))
             .otherwise(rest)
       }
       // insert values mirror insertAction's clause selection exactly
@@ -564,15 +560,15 @@ final class MergeBuilder private[tables] (
             lit(null).cast(m.schema(name).dataType): Column) {
           case ((c, _), rest) =>
             val v = c.action match {
-              case InsertSet(set) => set.get(name).map(expr)
-                .getOrElse(lit(null).cast(m.schema(name).dataType))
+              case InsertSet(set) => set.getOrElse(name,
+                lit(null).cast(m.schema(name).dataType))
               // source-absent generated column: typed NULL placeholder,
               // recomputed from its rule at commit
               case _ if genAbsent(name) =>
                 lit(null).cast(m.schema(name).dataType)
               case _ => col(s"source.`$name`")
             }
-            when(c.cond.map(expr).getOrElse(lit(true)), v).otherwise(rest)
+            when(c.cond.getOrElse(lit(true)), v).otherwise(rest)
         }.as(name)
       }
       val inserts = source.alias("source")
@@ -700,20 +696,31 @@ object MergeBuilder {
     try new java.net.URI(u).getPath
     catch { case _: Exception => u }
 
-  private[tables] sealed trait ClauseKind
-  private[tables] case object Matched extends ClauseKind
-  private[tables] case object NotMatched extends ClauseKind
-  private[tables] case object NotMatchedBySource extends ClauseKind
+  private[graft] sealed trait ClauseKind
+  private[graft] case object Matched extends ClauseKind
+  private[graft] case object NotMatched extends ClauseKind
+  private[graft] case object NotMatchedBySource extends ClauseKind
 
-  private[tables] sealed trait MergeAction
-  private[tables] case object UpdateAll extends MergeAction
-  private[tables] case object InsertAll extends MergeAction
-  private[tables] final case class UpdateSet(set: Map[String, String]) extends MergeAction
-  private[tables] final case class InsertSet(set: Map[String, String]) extends MergeAction
-  private[tables] case object Delete extends MergeAction
+  private[graft] sealed trait MergeAction
+  private[graft] case object UpdateAll extends MergeAction
+  private[graft] case object InsertAll extends MergeAction
+  private[graft] final case class UpdateSet(set: Map[String, Column]) extends MergeAction
+  private[graft] final case class InsertSet(set: Map[String, Column]) extends MergeAction
+  private[graft] case object Delete extends MergeAction
 
-  private[tables] final case class Clause(
-      kind: ClauseKind, cond: Option[String], action: MergeAction)
+  private[graft] final case class Clause(
+      kind: ClauseKind, cond: Option[Column], action: MergeAction)
+
+  /** Clause `i`'s action tag: `m<i>`, `nm<i>` or `bs<i>` by kind,
+    * `del:`-prefixed for a delete. */
+  private[graft] def tagOf(c: Clause, i: Int): String = {
+    val base = c.kind match {
+      case Matched            => s"m$i"
+      case NotMatched         => s"nm$i"
+      case NotMatchedBySource => s"bs$i"
+    }
+    if (c.action == Delete) DeletePrefix + base else base
+  }
 
   private[graft] val TFlag = "__graft_t"
   private[graft] val SFlag = "__graft_s"
@@ -740,6 +747,9 @@ object MergeBuilder {
 /** Entry point mirroring Delta's `DeltaTable.merge`. */
 object MergeInto {
   def apply(table: ManagedTable, source: DataFrame, condition: String): MergeBuilder =
+    apply(table, source, expr(condition))
+
+  def apply(table: ManagedTable, source: DataFrame, condition: Column): MergeBuilder =
     new MergeBuilder(table, source, condition)
 
   /** Key-equality merge (`target.k = source.k`): takes the broadcast plan
@@ -747,5 +757,5 @@ object MergeInto {
     * key is a single column, i.e. every pipeline PK merge. */
   def byKey(table: ManagedTable, source: DataFrame, keyColumn: String): MergeBuilder =
     new MergeBuilder(table, source,
-      s"target.`$keyColumn` = source.`$keyColumn`", Some(keyColumn))
+      col(s"target.`$keyColumn`") === col(s"source.`$keyColumn`"), Some(keyColumn))
 }

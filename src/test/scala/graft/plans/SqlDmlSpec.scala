@@ -852,4 +852,39 @@ class SqlDmlSpec extends AnyFunSuite with Matchers {
       s"UPDATE $name SET qty = (SELECT max(kid) FROM corr_sq) WHERE id = 1"))
     e2.getMessage should include("not supported")
   }
+
+  test("lambda conditions and values in DELETE / UPDATE / MERGE reach the " +
+      "engine as analyzed expressions") {
+    import spark.implicits._
+    val db = s"lam${System.nanoTime() % 1000000}"
+    spark.sql(s"CREATE DATABASE $db")
+    val path =
+      java.nio.file.Files.createTempDirectory("graft-lambda").toString + "/t"
+    val t = ManagedTable(spark, path)
+    t.overwriteAll(Seq((1, Seq("a", "b")), (2, Seq("bad", "c")),
+      (3, Seq("d")), (4, Seq("e", "bad"))).toDF("id", "tags"))
+    spark.sql(s"CREATE TABLE $db.t USING graft LOCATION '$path'")
+    def rows(): Seq[(Int, Seq[String])] = t.read().orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getSeq[String](1))).toSeq
+
+    spark.sql(s"UPDATE $db.t SET tags = transform(tags, x -> upper(x)) " +
+      "WHERE id = 1").collect().map(_.getLong(0)) shouldBe Array(1L)
+    rows().head shouldBe ((1, Seq("A", "B")))
+
+    Seq((2, Seq("fixed")), (3, Seq("x")), (5, Seq("new")))
+      .toDF("id", "tags").createOrReplaceTempView("lambda_src")
+    val merged = spark.sql(s"MERGE INTO $db.t t USING lambda_src s " +
+      "ON t.id = s.id " +
+      "WHEN MATCHED AND exists(t.tags, x -> x = 'bad') " +
+      "THEN UPDATE SET tags = s.tags " +
+      "WHEN NOT MATCHED THEN INSERT *").collect()
+    merged.map(r => (0 until 4).map(r.getLong)) shouldBe
+      Array(Seq(2L, 1L, 0L, 1L))
+    rows() shouldBe Seq((1, Seq("A", "B")), (2, Seq("fixed")),
+      (3, Seq("d")), (4, Seq("e", "bad")), (5, Seq("new")))
+
+    spark.sql(s"DELETE FROM $db.t WHERE exists(tags, x -> x = 'bad')")
+      .collect().map(_.getLong(0)) shouldBe Array(1L)
+    rows().map(_._1) shouldBe Seq(1, 2, 3, 5)
+  }
 }

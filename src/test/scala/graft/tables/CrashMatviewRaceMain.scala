@@ -74,7 +74,12 @@ object CrashMatviewRaceMain {
       case e: Throwable =>
         // surface the failure in the parent's drained output — a silent
         // child crash reads as "never committed" with no diagnosis
-        println(s"XMVRACE_CRASH $writerId ${e.getClass.getName}: ${e.getMessage}")
+        // on ONE line with its innermost frames: the parent echoes only
+        // this line, so a bare (often multi-line) message cannot name the
+        // failing read
+        println(s"XMVRACE_CRASH $writerId ${e.getClass.getName}: " +
+          String.valueOf(e.getMessage).replace('\n', ' ') + " at " +
+          e.getStackTrace.take(25).mkString(" < "))
         System.out.flush()
         throw e
     } finally spark.stop()

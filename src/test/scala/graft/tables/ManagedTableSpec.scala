@@ -73,11 +73,11 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     val m = t.manifest.get
     m.files.size shouldBe 3
     // a range predicate prunes to the single overlapping file
-    t.statsPrunedFiles(m, "id >= 25").size shouldBe 1
-    t.statsPrunedFiles(m, "id = 15 AND v != 'x'").size shouldBe 1
-    t.statsPrunedFiles(m, "id IN (3, 27)").size shouldBe 2
+    t.statsPrunedFiles(m, expr("id >= 25")).size shouldBe 1
+    t.statsPrunedFiles(m, expr("id = 15 AND v != 'x'")).size shouldBe 1
+    t.statsPrunedFiles(m, expr("id IN (3, 27)")).size shouldBe 2
     // untranslatable predicates keep everything — never an arbiter
-    t.statsPrunedFiles(m, "length(v) > 1").size shouldBe 3
+    t.statsPrunedFiles(m, expr("length(v) > 1")).size shouldBe 3
     // and the DML built on it stays correct
     t.delete("id >= 25") shouldBe 6L
     t.update(Map("v" -> "'z'"), "id = 15") shouldBe 1L
@@ -923,35 +923,44 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
 
   test("partition-predicate DELETE is metadata-only; UPDATE prunes its scan") {
     import spark.implicits._
-    val t = ManagedTable(spark, tmp() + "/dml3")
-    t.overwriteAll(
-      Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "y"), (4, "d", "z"))
-        .toDF("id", "name", "part"),
-      partitionBy = Seq("part"))
-    val before = t.manifest.get.files
-    val dataBefore = before.map(_.path).toSet
+    // the String API and its Column form must behave identically
+    Seq("string", "column").foreach { form =>
+      withClue(s"$form form: ") {
+        val byString = form == "string"
+        val t = ManagedTable(spark, tmp() + s"/dml3-$form")
+        t.overwriteAll(
+          Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "y"), (4, "d", "z"))
+            .toDF("id", "name", "part"),
+          partitionBy = Seq("part"))
+        val before = t.manifest.get.files
+        val dataBefore = before.map(_.path).toSet
 
-    // DELETE on the partition column alone: files of part=x drop out of
-    // the manifest with NO new data files written
-    t.delete("part = 'x'") shouldBe 2L
-    val after = t.manifest.get.files
-    after.map(_.path).toSet.subsetOf(dataBefore) shouldBe true // no rewrites
-    t.read().select("id").as[Int].collect().sorted shouldBe Array(3, 4)
+        // DELETE on the partition column alone: files of part=x drop out of
+        // the manifest with NO new data files written
+        (if (byString) t.delete("part = 'x'")
+         else t.delete(col("part") === "x")) shouldBe 2L
+        val after = t.manifest.get.files
+        after.map(_.path).toSet.subsetOf(dataBefore) shouldBe true // no rewrites
+        t.read().select("id").as[Int].collect().sorted shouldBe Array(3, 4)
 
-    // mixed predicate still row-level
-    t.delete("part = 'y' AND name = 'nope'") shouldBe 0L
-    t.read().count() shouldBe 2
+        // mixed predicate still row-level
+        (if (byString) t.delete("part = 'y' AND name = 'nope'")
+         else t.delete(col("part") === "y" && col("name") === "nope")) shouldBe 0L
+        t.read().count() shouldBe 2
 
-    // partition-only UPDATE: only part=z files are rewritten, part=y
-    // entries carry over untouched
-    val preUpd = t.manifest.get.files.map(_.path).toSet
-    t.update(Map("name" -> "upper(name)"), "part = 'z'") shouldBe 1L
-    val postUpd = t.manifest.get.files.map(_.path).toSet
-    val carried = preUpd intersect postUpd
-    // the part=y file survived; the part=z file was replaced
-    carried.size shouldBe 1
-    t.read().orderBy("id").select("name").as[String].collect() shouldBe
-      Array("c", "D")
+        // partition-only UPDATE: only part=z files are rewritten, part=y
+        // entries carry over untouched
+        val preUpd = t.manifest.get.files.map(_.path).toSet
+        (if (byString) t.update(Map("name" -> "upper(name)"), "part = 'z'")
+         else t.update(Map("name" -> upper(col("name"))), col("part") === "z")) shouldBe 1L
+        val postUpd = t.manifest.get.files.map(_.path).toSet
+        val carried = preUpd intersect postUpd
+        // the part=y file survived; the part=z file was replaced
+        carried.size shouldBe 1
+        t.read().orderBy("id").select("name").as[String].collect() shouldBe
+          Array("c", "D")
+      }
+    }
   }
 
   test("UPDATE applies SET to matching rows only, preserves types, counts rows") {

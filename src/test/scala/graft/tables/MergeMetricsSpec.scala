@@ -64,17 +64,29 @@ class MergeMetricsSpec extends AnyFunSuite with Matchers {
       (3, "a", 100, false), (4, "b", 100, false), (5, "a", 100, false),
       (11, "a", 5, false), (12, "b", 5, false), (13, "a", -1, false))
       .toDF("id", "p", "v", "del")
-    val results = routes.map { route =>
-      val t = target(tmp() + s"/$route")
+    import MergeBuilder._
+    // each route runs twice: the public String clauses, then the same
+    // merge built from Columns (the SQL surface's form)
+    val results = for (route <- routes; form <- Seq("string", "column")) yield {
+      val t = target(tmp() + s"/$route-$form")
       val m = withRoute(route) {
-        merge(route, t, src)
-          .whenMatchedDelete(Some("source.del = true"))
-          .whenMatchedUpdate(Map("v" -> "source.v"))
-          .whenNotMatchedInsertAll(Some("source.v > 0"))
-          .whenNotMatchedBySourceDelete(Some("target.v < 8"))
-          .execute()
+        (form match {
+          case "string" => merge(route, t, src)
+            .whenMatchedDelete(Some("source.del = true"))
+            .whenMatchedUpdate(Map("v" -> "source.v"))
+            .whenNotMatchedInsertAll(Some("source.v > 0"))
+            .whenNotMatchedBySourceDelete(Some("target.v < 8"))
+          case _ =>
+            (if (route == "generic")
+              MergeInto(t, src, col("target.id") === col("source.id"))
+            else MergeInto.byKey(t, src, "id"))
+              .add(Clause(Matched, Some(col("source.del") === true), Delete))
+              .add(Clause(Matched, None, UpdateSet(Map("v" -> col("source.v")))))
+              .add(Clause(NotMatched, Some(col("source.v") > 0), InsertAll))
+              .add(Clause(NotMatchedBySource, Some(col("target.v") < 8), Delete))
+        }).execute()
       }
-      route -> (m, rows(t))
+      s"$route/$form" -> (m, rows(t))
     }
     val expected = Map("del:m0" -> 2L, "m1" -> 3L, "nm2" -> 2L,
       "del:bs3" -> 2L, "unchanged" -> 3L)
