@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.tables.ManagedTable
+import graft.tables.{BroadcastHint, ManagedTable}
 
 /** Persistent MinHash/LSH near-duplicate index — the sign-once /
   * dedup-many shape of corpus-scale incremental deduplication.
@@ -50,14 +50,6 @@ final class DedupIndex(spark: SparkSession, val rootPath: String,
 
   private[ops] val bandsTable = ManagedTable(spark, s"$rootPath/bands")
   private[ops] val sigsTable = ManagedTable(spark, s"$rootPath/sigs")
-
-  /** Effective broadcast row bound for the probe's index joins —
-    * [[DedupIndex.BroadcastBandRowBound]] unless the session overrides
-    * `spark.graft.dedupindex.broadcastRowBound` (deployment tuning; and
-    * what lets tests force the shuffle backfill path on small data). */
-  private def broadcastBandRowBound: Long =
-    spark.conf.get("spark.graft.dedupindex.broadcastRowBound",
-      BroadcastBandRowBound.toString).toLong
 
   def exists: Boolean = bandsTable.exists && sigsTable.exists
 
@@ -236,8 +228,7 @@ final class DedupIndex(spark: SparkSession, val rootPath: String,
     // bucket-partitioned files straight into the hash join. A backfill-
     // sized batch falls back to the shuffle join.
     val inSide =
-      if (nInBands <= broadcastBandRowBound) broadcast(inBands.alias("a"))
-      else inBands.alias("a")
+      BroadcastHint(inBands.alias("a"), nInBands <= BroadcastBandRowBound)
     // persisted: the candidate-bucket collect below materializes the band
     // join once, and the final confirm join reads the cached candidates —
     // without this the (corpus-side) band join executes twice per probe
@@ -267,8 +258,7 @@ final class DedupIndex(spark: SparkSession, val rootPath: String,
     // both confirm joins so neither the cached batch signatures nor the
     // pruned corpus sigs shuffle
     val candSide =
-      if (nCand <= broadcastBandRowBound) broadcast(candWithBkt.drop("sbkt"))
-      else candWithBkt.drop("sbkt")
+      BroadcastHint(candWithBkt.drop("sbkt"), nCand <= BroadcastBandRowBound)
     candSide
       .join(inDocs.select(col("__id").as("in_id"), col("__hs").as("hs_a")),
         "in_id")
@@ -290,11 +280,9 @@ object DedupIndex {
   val DefaultBuckets = 64
 
   /** Batch band rows at or below this broadcast through the index joins
-    * (~50 B/row → ≲50 MB broadcast at the bound); larger batches fall
-    * back to shuffle joins. Default for
-    * `spark.graft.dedupindex.broadcastRowBound` (session-tunable so a
-    * deployment can match it to executor memory — and tests can force
-    * the shuffle backfill path on small data). */
+    * (~50 B/row → ≲50 MB broadcast at the bound); larger batches, and
+    * every batch under Spark's `spark.sql.autoBroadcastJoinThreshold=-1`,
+    * fall back to shuffle joins. */
   val BroadcastBandRowBound = 1000000L
 
   /** Probe-side rows per bucket above which the manifest partition prune

@@ -127,12 +127,12 @@ final class MergeStrategy extends Strategy {
     }
 
     // keyed merge: broadcast the slice, never shuffle the silver table;
-    // PK uniqueness was already proven by the sliceStats dup guard.
-    // Slices too large to broadcast (a backfill, a table-sized CDC batch)
-    // fall back to a shuffle join — exact row count is already known from
-    // sliceStats, so the choice costs nothing
+    // PK uniqueness was already proven by the sliceStats dup guard. A
+    // slice over MergeBuilder.BroadcastSourceBytes (a backfill, a
+    // table-sized CDC batch) takes a shuffle join, as does every slice
+    // under spark.sql.autoBroadcastJoinThreshold=-1; the slice is
+    // persisted and counted, so its size is exact
     val builder = MergeInto.byKey(p.table, df, pk).assumeUniqueSourceKeys()
-    if (Strategy.sliceTooLargeToBroadcast(p, n)) builder.largeSource()
     prunedPartitions(p).foreach(builder.prunePartitions)
     builder
       .whenMatchedUpdate(
@@ -199,12 +199,13 @@ final class HistoricStrategy extends Strategy {
 
     val pruned = prunedPartitions(p)
 
-    // Broadcast plan (same shape as MergeBuilder.executeKeyed): the target
-    // is scanned once, never shuffled. History rows (IsCurrent=false) fall
-    // out as unmatched; brand-new keys come from a small anti-join.
-    val bigSlice = Strategy.sliceTooLargeToBroadcast(p, n)
+    // Broadcast plan (same shape and size rule as MergeBuilder.executeKeyed):
+    // the target is scanned once, never shuffled. History rows
+    // (IsCurrent=false) fall out as unmatched; brand-new keys come from a
+    // small anti-join.
+    val smallSlice = graft.tables.MergeBuilder.smallSource(src)
     val s0 = src.withColumn(graft.tables.MergeBuilder.SFlag, lit(true)).alias("source")
-    val s = if (bigSlice) s0 else broadcast(s0)
+    val s = graft.tables.BroadcastHint(s0, smallSlice)
     def joinSlice(tgt: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       tgt.withColumn(graft.tables.MergeBuilder.TFlag, lit(true)).alias("target")
         .join(s,
@@ -304,7 +305,7 @@ final class HistoricStrategy extends Strategy {
 
       val matchedKeys0 = probe.filter(col("__mk").isNotNull)
         .select(col("__mk").as(pk)).distinct()
-      val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
+      val matchedKeys = graft.tables.BroadcastHint(matchedKeys0, smallSlice)
       // the inserted count is observed by the phase-2 write job, the
       // one action that runs the anti-join; the commit waits for it
       val inserted = new RowCounts(Seq("inserted" -> lit(true)))
@@ -334,39 +335,6 @@ final class HistoricStrategy extends Strategy {
 }
 
 object Strategy {
-
-  /** Slice row count above which merge strategies stop broadcasting the
-    * slice (and its matched-key set) and let Catalyst/AQE pick a shuffle
-    * join instead. */
-  def broadcastMaxRows(spark: org.apache.spark.sql.SparkSession): Long =
-    confLong(spark, "spark.graft.merge.broadcastMaxRows", 10000000L)
-
-  /** Estimated slice bytes above which broadcasting is refused even under
-    * the row cap — rows are a weak proxy for the real hazard (a wide
-    * 9M-row slice can be 10 GB). Default 1 GiB, well under Spark's 8 GB
-    * broadcast hard limit. */
-  def broadcastMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    confLong(spark, "spark.graft.merge.broadcastMaxBytes", 1L << 30)
-
-  private def confLong(spark: org.apache.spark.sql.SparkSession,
-      key: String, default: Long): Long =
-    try spark.conf.get(key, default.toString).toLong
-    catch { case _: NumberFormatException =>
-      org.slf4j.LoggerFactory.getLogger(classOf[Strategy])
-        .warn(s"Malformed $key; using $default")
-      default
-    }
-
-  /** Whether the (already persisted and counted) slice is too large to
-    * broadcast: row cap OR byte estimate. The byte estimate comes from the
-    * cached relation's statistics — the slice was materialized by the
-    * stats aggregation, so the size is real, not a planner guess. */
-  def sliceTooLargeToBroadcast(p: Processing, rows: Long): Boolean = {
-    val spark = p.source.df.sparkSession
-    val bytes = p.source.df.queryExecution.optimizedPlan.stats.sizeInBytes
-    rows > broadcastMaxRows(spark) ||
-      bytes > BigInt(broadcastMaxBytes(spark))
-  }
 
   def forType(t: ProcessType): Strategy = t match {
     case ProcessType.Full     => new FullStrategy()

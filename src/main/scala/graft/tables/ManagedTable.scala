@@ -1022,8 +1022,15 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       .map(_.toLong).sorted.reverse
     versions.iterator.flatMap { v =>
       // lock-free: a concurrent vacuum may delete a record between the
-      // listing and the read — skip it (its txn was rolled forward)
-      try recordTxn(v) catch { case _: java.io.FileNotFoundException => None }
+      // listing and the read — skip it (its txn was rolled forward). A
+      // torn record above the head (a crashed writer's, or one still
+      // being written) is no commit either: skip it as if it had vanished
+      try recordTxn(v) catch {
+        case _: java.io.FileNotFoundException => None
+        case scala.util.control.NonFatal(e) if isTornRecord(e,
+            fs.getFileStatus(new Path(manifestsDir, f"v$v%020d.json")).getLen) =>
+          None
+      }
     }.collectFirst { case t if t.appId == appId => t.batchId }
   }
 
@@ -1702,10 +1709,11 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * / `_metadata.row_index` columns, anti-joined against the referenced
     * DV sidecars on (basename, position). The DV side broadcasts while
     * its recorded cardinality stays under
-    * `spark.graft.dv.broadcastMaxPositions` (default 4M — a broadcast
-    * hash anti-join keeps the scan shuffle-free); beyond that the join
-    * falls back to a shuffled anti-join, and maintenance should have
-    * purged long before ([[purgeDeletionVectors]]). */
+    * [[ManagedTable.DvBroadcastMaxPositions]] (a broadcast hash anti-join
+    * keeps the scan shuffle-free) and Spark's
+    * `spark.sql.autoBroadcastJoinThreshold` is not `-1`; otherwise the
+    * join is a shuffled anti-join, and past the bound maintenance should
+    * have purged long before ([[purgeDeletionVectors]]). */
   private def readDvFiltered(m: Manifest, files: Seq[TableFile],
       tag: Option[String], pos: Option[String] = None,
       extraMat: Seq[String] = Nil): DataFrame = {
@@ -1719,11 +1727,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       .withColumn(DvPosCol, col("_metadata.row_index"))
     val scan = tag.fold(scan0)(t =>
       scan0.withColumn(t, col("_metadata.file_path")))
-    val dead0 = readDvSidecars(files.flatMap(_.dv).distinct)
-    val dead =
-      if (files.flatMap(_.dvRows).sum <= dvBroadcastMaxPositions)
-        broadcast(dead0)
-      else dead0
+    val dead = BroadcastHint(readDvSidecars(files.flatMap(_.dv).distinct),
+      files.flatMap(_.dvRows).sum <= ManagedTable.DvBroadcastMaxPositions)
     // output stays PHYSICAL — [[readFilesWithTag]] does the final
     // physical→logical projection uniformly for clean and masked files
     val outCols = scanSchema.fieldNames.toSeq.map(n => col(s"`$n`")) ++
@@ -1752,8 +1757,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     propOrConf("spark.graft.dv.enabled", "false").toBoolean
   private[tables] def dvMaxDeletedFraction: Double =
     propOrConf("spark.graft.dv.maxDeletedFraction", "0.5").toDouble
-  private def dvBroadcastMaxPositions: Long =
-    propOrConf("spark.graft.dv.broadcastMaxPositions", "4000000").toLong
 
   // ---------------------------------------------------------------- writes
 
@@ -1841,8 +1844,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     try {
       val p = new Path(manifestsDir, f"v$version%020d.json")
       val st = fs.getFileStatus(p)
-      val torn = st.getLen == 0 ||
-        cause.isInstanceOf[com.fasterxml.jackson.core.JacksonException]
+      val torn = isTornRecord(cause, st.getLen)
       val grace = spark.conf.get(
         "spark.graft.commit.tornRecordGraceMs", "60000").toLong
       if (torn && System.currentTimeMillis() - st.getModificationTime > grace) {
@@ -1865,6 +1867,13 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         }
       }
     } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Whether a record whose read failed with `cause` is torn: not valid
+    * JSON, or zero-length. Such a record cannot be a commit from any
+    * writer (see [[maybeDropTornRecord]]); one that parses but fails the
+    * format guard is not torn. */
+  private def isTornRecord(cause: Throwable, len: => Long): Boolean =
+    cause.isInstanceOf[com.fasterxml.jackson.core.JacksonException] || len == 0
 
   /** Adopt an existing parquet directory as a managed table IN PLACE
     * (Delta's `CONVERT TO DELTA`): enumerate the data files, read their
@@ -2618,10 +2627,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
       else readDvSidecars(priorNames).filter(col("file").isin(maskedNames: _*))
-    val priorB =
-      if (candidates.flatMap(_.dvRows).sum <= dvBroadcastMaxPositions)
-        broadcast(prior)
-      else prior
+    val priorB = BroadcastHint(prior,
+      candidates.flatMap(_.dvRows).sum <= ManagedTable.DvBroadcastMaxPositions)
     def notPriorMasked(df: DataFrame): DataFrame =
       df.join(priorB,
         df(DvFileCol) === priorB("file") && df(DvPosCol) === priorB("pos"),
@@ -5394,6 +5401,10 @@ object ManagedTable {
     * cross-process commit race (an orphan record never resolves —
     * retrying forever would hang the writer on operator error). */
   val MaxAppendRetries = 5
+
+  /** Deletion-vector positions up to which a masked read or DV DML
+    * broadcasts the DV side of its anti-join (~16 B each, so ≲ 64 MB). */
+  private[tables] val DvBroadcastMaxPositions = 4000000L
 
   /** JVM-global cache of manifest-record file CONTENTS keyed by the
     * record's fully-qualified path. Records are immutable once published

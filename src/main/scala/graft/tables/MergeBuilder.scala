@@ -16,8 +16,12 @@ import org.apache.spark.storage.StorageLevel
   * file-granular rewrite — touch-detect via `input_file_name()` under a
   * broadcast join, then rewrite ONLY the touched files and carry every
   * untouched manifest entry into the new version verbatim (see
-  * [[executeKeyed]]). The generic-condition path is one declarative
-  * full-outer-join program committed at partition granularity:
+  * [[executeKeyed]]). The source is broadcast when its optimized plan
+  * estimates at most [[MergeBuilder.BroadcastSourceBytes]]; larger
+  * sources, and every source under Spark's
+  * `spark.sql.autoBroadcastJoinThreshold=-1`, take a shuffle join. The
+  * generic-condition path is one declarative full-outer-join program
+  * committed at partition granularity:
   * {{{
   *   target (partition-pruned) FULL OUTER JOIN source ON <condition>
   *   → per-column CASE chain picks target/source/override value
@@ -50,7 +54,6 @@ final class MergeBuilder private[tables] (
   private var clauses = Vector.empty[Clause]
   private var pruned: Option[Seq[Map[String, String]]] = None
   private var sourceKeysUnique = false
-  private var broadcastSource = true
   private var txn: Option[Txn] = None
   private var operationName = "merge"
   private var schemaEvolution = false
@@ -72,12 +75,9 @@ final class MergeBuilder private[tables] (
       .filterNot(c => srcCols(c.toLowerCase))
   }
 
-  /** Declare the source too large to broadcast (a backfill slice, a
-    * table-sized CDC batch): the keyed path then drops its broadcast
-    * hints and lets Catalyst/AQE pick a shuffle join — the target IS
-    * shuffled in exchange for not materializing the source on every
-    * executor (and not OOMing the driver building the broadcast). */
-  def largeSource(): this.type = { broadcastSource = false; this }
+  /** Whether the source is small enough to broadcast, from its plan's
+    * size estimate (exact for the pipeline's persisted, counted slice). */
+  private lazy val smallSource: Boolean = MergeBuilder.smallSource(source)
 
   /** Skip the keyed path's multi-match guard when the caller has already
     * proven source-key uniqueness (the pipeline's slice stats do) — saves
@@ -242,26 +242,22 @@ final class MergeBuilder private[tables] (
     * skipped. Gated on (a) the target having a bloom index registered on
     * the key (file min/max alone never prunes a uniform hash PK — the
     * surrogate-key common case, see [[executeKeyed]]'s doc), and (b) the
-    * source being broadcast-small with at most
-    * `spark.graft.merge.bloomPruneMaxKeys` distinct keys, so the key
-    * collect is driver-bounded. Metrics stay exact: a skipped file's rows
-    * price into `unchanged` from the manifest exactly like a scanned-but-
-    * untouched file's. This is Delta's BLOOMFILTER + MERGE economics — a
+    * source being broadcast-small with at most [[BloomPruneMaxKeys]]
+    * distinct keys, so the key collect is driver-bounded. Metrics stay
+    * exact: a skipped file's rows price into `unchanged` from the
+    * manifest exactly like a scanned-but-untouched file's. This is Delta's BLOOMFILTER + MERGE economics — a
     * 10-row CDC slice against an unpartitioned 100 TB table probes
     * O(matching files), not O(table). */
   private def bloomPrunedProbeScope(m: Manifest, k: String,
       scopeFiles: Seq[TableFile]): Seq[TableFile] = {
-    val spark = source.sparkSession
-    val maxKeys =
-      spark.conf.get("spark.graft.merge.bloomPruneMaxKeys", "100000").toInt
-    val eligible = maxKeys > 0 && broadcastSource &&
+    val eligible = smallSource &&
       !clauses.exists(_.kind == NotMatchedBySource) &&
       table.bloomIndexes.contains(m.physicalName(k))
     if (!eligible) scopeFiles
     else {
       val keys = source.select(col(k)).filter(col(k).isNotNull)
-        .distinct().limit(maxKeys + 1).collect().map(_.get(0)).toSeq
-      if (keys.isEmpty || keys.size > maxKeys) scopeFiles
+        .distinct().limit(BloomPruneMaxKeys + 1).collect().map(_.get(0)).toSeq
+      if (keys.isEmpty || keys.size > BloomPruneMaxKeys) scopeFiles
       else {
         val might = table.filesMightContainAmong(m, k, keys, scopeFiles)
           .map(_.path).toSet
@@ -430,7 +426,9 @@ final class MergeBuilder private[tables] (
     * the 10 matched rows. Phase 1 scans only the columns the clause
     * conditions reference (column pruning reaches the parquet scan);
     * phase 2 re-reads just the touched files. Nothing table-sized is ever
-    * persisted: the probe frame holds matched + touched rows only. */
+    * persisted: the probe frame holds matched + touched rows only. Both
+    * hints follow [[BroadcastSourceBytes]] and the `-1` off switch
+    * ([[BroadcastHint]]); without them the target may shuffle. */
   private def executeKeyed(k: String): MergeMetrics = {
     val m = requireTarget
     val targetCols = m.schema.fields.map(_.name).toSeq
@@ -440,7 +438,7 @@ final class MergeBuilder private[tables] (
     lastProbeFileCount = probeFiles.size
 
     val s0 = source.withColumn(SFlag, lit(true)).alias("source")
-    val s = if (broadcastSource) broadcast(s0) else s0
+    val s = BroadcastHint(s0, smallSource)
 
     def joinTarget(target: DataFrame): DataFrame =
       target
@@ -544,8 +542,7 @@ final class MergeBuilder private[tables] (
       // insert side: source rows whose key matched nothing in the target
       val matchedKeys0 = probe.filter(col(MatchKey).isNotNull)
         .select(col(MatchKey).as(k)).distinct()
-      val matchedKeys =
-        if (broadcastSource) broadcast(matchedKeys0) else matchedKeys0
+      val matchedKeys = BroadcastHint(matchedKeys0, smallSource)
       val insertClauses = indexed.filter(_._1.kind == NotMatched)
       val insertAction = insertClauses.foldRight(lit(DropTag): Column) {
         case ((c, i), rest) =>
@@ -689,6 +686,19 @@ final class MergeBuilder private[tables] (
 }
 
 object MergeBuilder {
+
+  /** Merge sources whose optimized plan estimates at most this many bytes
+    * broadcast through the keyed merge and the pipeline's Historic merge:
+    * far under Spark's 8 GB broadcast limit, and a byte bound — row
+    * counts are a weak proxy (a wide 9M-row slice can be 10 GB). */
+  private[graft] val BroadcastSourceBytes: Long = 1L << 30
+
+  private[graft] def smallSource(source: DataFrame): Boolean =
+    source.queryExecution.optimizedPlan.stats.sizeInBytes <= BroadcastSourceBytes
+
+  /** Most distinct source keys the keyed merge collects to the driver to
+    * bloom-prune its probe scope; a source with more probes every file. */
+  private val BloomPruneMaxKeys = 100000
 
   /** Percent-decode a URI-style file name (input_file_name returns
     * URL-encoded names on some paths/filesystems). */

@@ -104,14 +104,23 @@ class DedupIndexSpec extends AnyFunSuite with Matchers {
     // re-id'd copies of planted corpus texts: guaranteed matches
     val batch = docs.filter(col("doc_id") % 3 === 0)
       .withColumn("doc_id", col("doc_id") + 1000)
-    // reference run under the default (broadcast) bound
-    val expect = canon(idx.nearDupPairs(batch, "doc_id", "text"))
+    // reference run with the probe joins broadcast
+    val (expect, _, hinted) = graft.PlanTrace.traced(spark)(
+      canon(idx.nearDupPairs(batch, "doc_id", "text")))
     expect should not be empty
-    // force EVERY probe join past the bound → shuffle backfill path
-    spark.conf.set("spark.graft.dedupindex.broadcastRowBound", "0")
+    graft.PlanTrace.broadcastHashJoins(hinted) should not be empty
+    // drop the reference run's persisted substrates: a cache lookup
+    // ignores hints, so the forced run would reuse their broadcast plans
+    SubstrateCache.release(spark)
+    // Spark's own off switch: EVERY probe join → shuffle backfill path
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val df = idx.nearDupPairs(batch, "doc_id", "text")
-      canon(df) shouldBe expect
+      val (df, _, execs) = graft.PlanTrace.traced(spark) {
+        val df = idx.nearDupPairs(batch, "doc_id", "text")
+        canon(df) shouldBe expect
+        df
+      }
+      graft.PlanTrace.broadcastHashJoins(execs) shouldBe empty
       // the driver-side manifest prune is independent of join strategy:
       // the bands scan must still touch ONLY the batch's buckets
       val batchBkts = DedupIndex.flatBands(
@@ -138,7 +147,7 @@ class DedupIndexSpec extends AnyFunSuite with Matchers {
         touched.subsetOf(batchBkts) shouldBe true
       }
     } finally
-      spark.conf.unset("spark.graft.dedupindex.broadcastRowBound")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("no collisions: a disjoint batch yields zero pairs and empty-prune safety") {

@@ -5,12 +5,12 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import java.nio.file.Files
 
+import graft.PlanTrace.traced
 import graft.metadata._
 import graft.tables.ManagedTable
 
@@ -30,7 +30,8 @@ class OnePassMergeSpec extends AnyFunSuite with Matchers {
   import spark.implicits._
 
   /** A year-partitioned Merge entity with a `SeqNr` watermark and the run
-    * log on — the daily CDC shape. */
+    * log on — the daily CDC shape — and a year-partitioned Historic
+    * entity. */
   private def cdcFixture(): Metadata = {
     val root = Files.createTempDirectory("graft-onepass").toString
     Metadata.fromJson(s"""{
@@ -42,6 +43,10 @@ class OnePassMergeSpec extends AnyFunSuite with Matchers {
           "watermark": [ { "column": "SeqNr" } ],
           "columns": [
             { "name": "ID", "datatype": "long", "fieldroles": ["businesskey"] },
+            { "name": "year", "datatype": "integer", "fieldroles": ["partition"] } ] },
+        { "id": 2, "name": "hist", "connection": "src1", "processtype": "historic",
+          "columns": [
+            { "name": "ID", "datatype": "long", "fieldroles": ["businesskey"] },
             { "name": "year", "datatype": "integer", "fieldroles": ["partition"] } ] } ]
     }""")
   }
@@ -51,47 +56,6 @@ class OnePassMergeSpec extends AnyFunSuite with Matchers {
 
   private def cdcRows(rows: Seq[(Long, Int, Long, Long, Boolean)]): DataFrame =
     rows.toDF("ID", "year", "amount", "SeqNr", "deleted")
-
-  /** Runs `body` and returns the Spark jobs it started (counted through
-    * the job group, which AQE and broadcast pool threads inherit) and the
-    * query executions that completed inside it. Both listeners sit on the
-    * listener bus's shared queue: once a marker job started after `body`
-    * has been seen, every event of `body` has been delivered. */
-  private def traced[T](body: => T): (T, Int, Seq[QueryExecution]) = {
-    val sc = spark.sparkContext
-    val group = s"onepass-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    @volatile var open = true
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-drained" => open = false; drained.countDown()
-          case _ => ()
-        }
-    }
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (open) execs.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    try {
-      sc.setJobGroup(group, "one-pass merge job budget")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drained", "listener drain marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      drained.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      import scala.jdk.CollectionConverters._
-      (out, jobs.get, execs.asScala.toSeq)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(qeListener)
-    }
-  }
 
   test("one pipeline Merge slice runs at most 5 jobs in process(), and its " +
       "write reads no cached resolved frame") {
@@ -109,7 +73,7 @@ class OnePassMergeSpec extends AnyFunSuite with Matchers {
     writeSlice(md, e, "slice1.parquet", cdcRows(slice))
     val p = new Processing(md, e, "slice1.parquet")
     p.sliceStats.total shouldBe 6
-    val (summary, jobs, execs) = traced(p.process())
+    val (summary, jobs, execs) = traced(spark)(p.process())
     summary.updated shouldBe 3
     summary.inserted shouldBe 2
     summary.deleted shouldBe 1
@@ -130,6 +94,49 @@ class OnePassMergeSpec extends AnyFunSuite with Matchers {
     out.filter($"deleted").select("ID").as[Long].collect() shouldBe Array(110L)
     out.filter($"ID" === 85L).select("amount").as[Long].head() shouldBe 2L
     tableWrites should not be empty
+  }
+
+  private def targetNeverShuffled(execs: Seq[QueryExecution], t: ManagedTable): Unit =
+    graft.PlanTrace.assertStreamedIntoBroadcastJoins(execs,
+      new java.io.File(t.rootPath, "data").getPath)
+
+  test("plan lock: a keyed-route Merge slice broadcasts the slice and " +
+      "never shuffles the target") {
+    spark.conf.set("spark.graft.merge.smallScopeBytes", "0") // keyed route
+    try {
+      val md = cdcFixture()
+      val e = md.getEntity(1)
+      writeSlice(md, e, "initial.parquet", cdcRows((0L until 120L).map(i =>
+        (i, 2019 + (i / 20).toInt, i * 7, 0L, false))))
+      new Processing(md, e, "initial.parquet").process()
+      writeSlice(md, e, "slice1.parquet", cdcRows(Seq(
+        (100L, 2024, 1L, 1L, false), (121L, 2024, 5L, 1L, false),
+        (110L, 2024, 770L, 1L, true))))
+      val p = new Processing(md, e, "slice1.parquet")
+      val (summary, _, execs) = traced(spark)(p.process())
+      summary.updated shouldBe 1
+      summary.inserted shouldBe 1
+      summary.deleted shouldBe 1
+      targetNeverShuffled(execs, p.table)
+    } finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
+  }
+
+  test("plan lock: a Historic slice broadcasts the slice and never " +
+      "shuffles the target") {
+    val md = cdcFixture()
+    val e = md.getEntity(2)
+    writeSlice(md, e, "initial.parquet", (0L until 60L)
+      .map(i => (i, 2019 + (i / 20).toInt, i)).toDF("ID", "year", "amount"))
+    new Processing(md, e, "initial.parquet").process()
+    writeSlice(md, e, "slice1.parquet",
+      Seq((5L, 2019, 50L), (59L, 2021, 59L), (70L, 2021, 1L))
+        .toDF("ID", "year", "amount"))
+    val p = new Processing(md, e, "slice1.parquet")
+    val (summary, _, execs) = traced(spark)(p.process())
+    summary.updated shouldBe 1
+    summary.unchanged shouldBe 1
+    summary.inserted shouldBe 1
+    targetNeverShuffled(execs, p.table)
   }
 
   /** The pre-fusion partition-value collection, kept as the oracle. */

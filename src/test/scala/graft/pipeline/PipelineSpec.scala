@@ -294,9 +294,12 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     to.bloomIndexes shouldBe empty
   }
 
-  test("merge + historic stay correct when the slice exceeds broadcastMaxRows") {
-    // threshold 1 row: every slice takes the no-broadcast (shuffle) path
-    spark.conf.set("spark.graft.merge.broadcastMaxRows", "1")
+  test("merge + historic stay correct with broadcasting switched off") {
+    // Spark's own off switch: no slice broadcasts, every merge join
+    // takes the shuffle path; smallScopeBytes=0 keeps the Merge entity
+    // on the keyed route, whose slice join is the one that would broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.graft.merge.smallScopeBytes", "0")
     try {
       val md = fixture()
       writeSlice(md, md.getEntity(2), "s1.parquet",
@@ -304,7 +307,8 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       run(md, 2, "s1.parquet", T1)
       writeSlice(md, md.getEntity(2), "s2.parquet",
         mergeSlice(Seq((1, 5, "a2"), (3, 5, "c"))))
-      val sum = run(md, 2, "s2.parquet", T2)
+      val (sum, _, mergeExecs) =
+        graft.PlanTrace.traced(spark)(run(md, 2, "s2.parquet", T2))
       sum.updated shouldBe 1
       sum.inserted shouldBe 1
 
@@ -312,10 +316,15 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       writeSlice(md, eh, "s1.parquet", Seq((1, "a")).toDF("ID", "name"))
       run(md, 3, "s1.parquet", T1)
       writeSlice(md, eh, "s2.parquet", Seq((1, "a2"), (2, "b")).toDF("ID", "name"))
-      run(md, 3, "s2.parquet", T2)
+      val (_, _, histExecs) =
+        graft.PlanTrace.traced(spark)(run(md, 3, "s2.parquet", T2))
       val t = new Processing(md, eh, "s2.parquet").table.read()
       t.count() shouldBe 3 // closed v1 + open v2 for ID 1, open v1 for ID 2
-    } finally spark.conf.unset("spark.graft.merge.broadcastMaxRows")
+      graft.PlanTrace.broadcastHashJoins(mergeExecs ++ histExecs) shouldBe empty
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.graft.merge.smallScopeBytes")
+    }
   }
 
   test("merge: first run diverts to full; then update/touch/insert") {

@@ -887,4 +887,36 @@ class SqlDmlSpec extends AnyFunSuite with Matchers {
       .collect().map(_.getLong(0)) shouldBe Array(1L)
     rows().map(_._1) shouldBe Seq(1, 2, 3, 5)
   }
+
+  test("plan lock: MERGE USING a filtered larger table broadcasts the " +
+      "source and never shuffles the target") {
+    import spark.implicits._
+    val (name, t) = freshTable()
+    val db = name.takeWhile(_ != '.')
+    // an incompressible-string table whose scan estimate exceeds Spark's
+    // default broadcast threshold: a 2-row filter over it is the source
+    // Spark alone would plan as a sort-merge join against the target
+    val bigPath =
+      java.nio.file.Files.createTempDirectory("graft-big").toString + "/big"
+    ManagedTable(spark, bigPath).overwriteAll(spark.range(0, 400000)
+      .select(col("id").cast("int").as("id"),
+        org.apache.spark.sql.functions.sha2(col("id").cast("string"), 256)
+          .as("name"),
+        (col("id") % 100).cast("int").as("qty")))
+    spark.sql(s"CREATE TABLE $db.big USING graft LOCATION '$bigPath'")
+    val using = s"SELECT id, name, qty FROM $db.big WHERE id IN (2, 7)"
+    spark.sql(using).queryExecution.optimizedPlan.stats.sizeInBytes should be >
+      BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold)
+    spark.conf.set("spark.graft.merge.smallScopeBytes", "0") // keyed route
+    val (out, _, execs) = try graft.PlanTrace.traced(spark)(
+      spark.sql(s"MERGE INTO $name t USING ($using) s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+        .collect())
+      finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
+    out.map(r => (0 until 4).map(r.getLong)) shouldBe Array(Seq(2L, 1L, 0L, 1L))
+    t.read().orderBy("id").select("id", "qty").as[(Int, Int)].collect() shouldBe
+      Array((1, 10), (2, 2), (3, 30), (4, 40), (7, 7))
+    graft.PlanTrace.assertStreamedIntoBroadcastJoins(execs,
+      new java.io.File(t.rootPath, "data").getPath)
+  }
 }

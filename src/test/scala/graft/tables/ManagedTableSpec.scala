@@ -173,6 +173,29 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("newestRecordTxn skips a torn record above the head") {
+    import org.apache.hadoop.fs.Path
+    val t = ManagedTable(spark, tmp() + "/torn-txn")
+    t.overwriteAll(df(Seq((1, "a", "x"))))                        // v0
+    t.append(df(Seq((2, "b", "y"))), txn = Some(Txn("app", 7L))) // v1
+    val fs = new Path(t.rootPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = new Path(t.rootPath, f"_graft/manifests/v${2L}%020d.json")
+    def put(content: String): Unit = {
+      val out = fs.create(next, true)
+      out.write(content.getBytes("UTF-8")); out.close()
+    }
+    // a record still being written above the head, or left by a crashed
+    // writer: zero-length, then truncated JSON
+    for (content <- Seq("", """{"version":2,"txn":{"app""")) {
+      put(content)
+      t.newestRecordTxn("app") shouldBe Some(7L)
+    }
+    // a record that parses but fails the format guard is not torn
+    put("""{"version":2,"format":999}""")
+    intercept[IllegalArgumentException](t.newestRecordTxn("app"))
+  }
+
   test("deepCloneTo: independent copy — source vacuum cannot break it") {
     val t = ManagedTable(spark, tmp() + "/dc-src")
     t.overwriteAll(df(Seq((1, "a", "x"), (2, "b", "y"))), Seq("part"))
@@ -482,7 +505,7 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     metrics.count("nm1") shouldBe 1
   }
 
-  test("keyed merge largeSource drops broadcast hints, same result") {
+  test("keyed merge with broadcasting switched off: shuffle joins, same result") {
     def setup(): ManagedTable = {
       val t = ManagedTable(spark, tmp() + "/ls")
       t.overwriteAll(df(Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "x"))))
@@ -493,24 +516,26 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
       .whenMatchedUpdateAll(cond = Some("target.name != source.name"))
       .whenNotMatchedInsertAll()
 
-    val tb = setup()
-    val mb = clauses(MergeInto.byKey(tb, src, "id")).execute()
-    val tl = setup()
-    val ml = clauses(MergeInto.byKey(tl, src, "id").largeSource()).execute()
-
-    val rows = (t: ManagedTable) => t.read().collect()
-      .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
-    rows(tl) shouldBe rows(tb)
-    rows(tl) shouldBe Seq((1, "a"), (2, "B"), (3, "c"), (4, "d"))
-    ml.byTag shouldBe mb.byTag
-    // and the pipeline-level threshold picks the same path end-to-end: a
-    // 2-row slice over broadcastMaxRows=1 merges correctly without hints
-    spark.conf.set("spark.graft.merge.broadcastMaxRows", "1")
+    spark.conf.set("spark.graft.merge.smallScopeBytes", "0") // keyed route
     try {
-      val t2 = setup()
-      clauses(MergeInto.byKey(t2, src, "id").largeSource()).execute()
-      rows(t2) shouldBe rows(tb)
-    } finally spark.conf.unset("spark.graft.merge.broadcastMaxRows")
+      val tb = setup()
+      val (mb, _, hinted) = graft.PlanTrace.traced(spark)(
+        clauses(MergeInto.byKey(tb, src, "id")).execute())
+      // Spark's own off switch drops the keyed path's broadcast hints
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val tl = setup()
+      val (ml, _, forced) = try graft.PlanTrace.traced(spark)(
+          clauses(MergeInto.byKey(tl, src, "id")).execute())
+        finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+      val rows = (t: ManagedTable) => t.read().collect()
+        .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+      rows(tl) shouldBe rows(tb)
+      rows(tl) shouldBe Seq((1, "a"), (2, "B"), (3, "c"), (4, "d"))
+      ml.byTag shouldBe mb.byTag
+      graft.PlanTrace.broadcastHashJoins(hinted) should not be empty
+      graft.PlanTrace.broadcastHashJoins(forced) shouldBe empty
+    } finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
   }
 
   test("keyed merge with partition pruning leaves other partitions untouched") {
