@@ -505,7 +505,7 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     metrics.count("nm1") shouldBe 1
   }
 
-  test("keyed merge with broadcasting switched off: shuffle joins, same result") {
+  test("keyed merge with broadcasting off: shuffle joins, same result") {
     def setup(): ManagedTable = {
       val t = ManagedTable(spark, tmp() + "/ls")
       t.overwriteAll(df(Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "x"))))
