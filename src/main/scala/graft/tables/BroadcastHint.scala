@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
 /** The engine's size-decided broadcast-join hints. Each caller decides
-  * `small` from a size it already holds — a plan's byte estimate, a
+  * `small` from a size it already holds — a cached source's bytes, a
   * manifest's deletion-vector position count, an exact row count —
   * checked against a named constant. An explicit hint overrides Spark's
   * `spark.sql.autoBroadcastJoinThreshold`, so this honours that setting's

@@ -1023,13 +1023,12 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     versions.iterator.flatMap { v =>
       // lock-free: a concurrent vacuum may delete a record between the
       // listing and the read — skip it (its txn was rolled forward). A
-      // torn record above the head (a crashed writer's, or one still
-      // being written) is no commit either: skip it as if it had vanished
+      // torn record (a crashed writer's, or one still being written; one
+      // gone before its length is read counts as empty) is no commit
       try recordTxn(v) catch {
         case _: java.io.FileNotFoundException => None
-        case scala.util.control.NonFatal(e) if isTornRecord(e,
-            fs.getFileStatus(new Path(manifestsDir, f"v$v%020d.json")).getLen) =>
-          None
+        case scala.util.control.NonFatal(e) if isTornRecord(e, scala.util.Try(
+          fs.getFileStatus(new Path(manifestsDir, f"v$v%020d.json")).getLen).getOrElse(0L)) => None
       }
     }.collectFirst { case t if t.appId == appId => t.batchId }
   }

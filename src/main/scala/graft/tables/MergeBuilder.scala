@@ -1,6 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,12 +17,11 @@ import org.apache.spark.storage.StorageLevel
   * file-granular rewrite — touch-detect via `input_file_name()` under a
   * broadcast join, then rewrite ONLY the touched files and carry every
   * untouched manifest entry into the new version verbatim (see
-  * [[executeKeyed]]). The source is broadcast when its optimized plan
-  * estimates at most [[MergeBuilder.BroadcastSourceBytes]]; larger
-  * sources, and every source under Spark's
-  * `spark.sql.autoBroadcastJoinThreshold=-1`, take a shuffle join. The
-  * generic-condition path is one declarative full-outer-join program
-  * committed at partition granularity:
+  * [[executeKeyed]]). The source is broadcast unless it is measured
+  * above [[MergeBuilder.BroadcastSourceBytes]] or Spark's
+  * `spark.sql.autoBroadcastJoinThreshold` is `-1`. The generic-condition
+  * path is one declarative full-outer-join program committed at
+  * partition granularity:
   * {{{
   *   target (partition-pruned) FULL OUTER JOIN source ON <condition>
   *   → per-column CASE chain picks target/source/override value
@@ -75,8 +75,6 @@ final class MergeBuilder private[tables] (
       .filterNot(c => srcCols(c.toLowerCase))
   }
 
-  /** Whether the source is small enough to broadcast, from its plan's
-    * size estimate (exact for the pipeline's persisted, counted slice). */
   private lazy val smallSource: Boolean = MergeBuilder.smallSource(source)
 
   /** Skip the keyed path's multi-match guard when the caller has already
@@ -242,12 +240,12 @@ final class MergeBuilder private[tables] (
     * skipped. Gated on (a) the target having a bloom index registered on
     * the key (file min/max alone never prunes a uniform hash PK — the
     * surrogate-key common case, see [[executeKeyed]]'s doc), and (b) the
-    * source being broadcast-small with at most [[BloomPruneMaxKeys]]
-    * distinct keys, so the key collect is driver-bounded. Metrics stay
-    * exact: a skipped file's rows price into `unchanged` from the
-    * manifest exactly like a scanned-but-untouched file's. This is Delta's BLOOMFILTER + MERGE economics — a
-    * 10-row CDC slice against an unpartitioned 100 TB table probes
-    * O(matching files), not O(table). */
+    * source not measured too large to broadcast, with at most
+    * [[BloomPruneMaxKeys]] distinct keys, so the key collect is
+    * driver-bounded. Metrics stay exact: a skipped file's rows price into
+    * `unchanged` from the manifest like a scanned-but-untouched file's.
+    * This is Delta's BLOOMFILTER + MERGE economics — a 10-row CDC slice
+    * against an unpartitioned 100 TB table probes O(matching files). */
   private def bloomPrunedProbeScope(m: Manifest, k: String,
       scopeFiles: Seq[TableFile]): Seq[TableFile] = {
     val eligible = smallSource &&
@@ -427,7 +425,7 @@ final class MergeBuilder private[tables] (
     * conditions reference (column pruning reaches the parquet scan);
     * phase 2 re-reads just the touched files. Nothing table-sized is ever
     * persisted: the probe frame holds matched + touched rows only. Both
-    * hints follow [[BroadcastSourceBytes]] and the `-1` off switch
+    * hints follow [[MergeBuilder.smallSource]] and the `-1` off switch
     * ([[BroadcastHint]]); without them the target may shuffle. */
   private def executeKeyed(k: String): MergeMetrics = {
     val m = requireTarget
@@ -687,14 +685,21 @@ final class MergeBuilder private[tables] (
 
 object MergeBuilder {
 
-  /** Merge sources whose optimized plan estimates at most this many bytes
-    * broadcast through the keyed merge and the pipeline's Historic merge:
-    * far under Spark's 8 GB broadcast limit, and a byte bound — row
-    * counts are a weak proxy (a wide 9M-row slice can be 10 GB). */
+  /** The keyed and Historic merges broadcast their source unless it is
+    * measured above this many bytes (far under Spark's 8 GB limit): only
+    * a source all of whose plan leaves are loaded caches, like the
+    * pipeline's persisted, counted slice, has a measured size. Any other
+    * plan's estimate can be far above its real size (a filter keeps its
+    * child's), so such a source always broadcasts. */
   private[graft] val BroadcastSourceBytes: Long = 1L << 30
 
-  private[graft] def smallSource(source: DataFrame): Boolean =
-    source.queryExecution.optimizedPlan.stats.sizeInBytes <= BroadcastSourceBytes
+  private[graft] def smallSource(source: DataFrame): Boolean = {
+    val plan = source.queryExecution.optimizedPlan
+    plan.collectLeaves().exists {
+      case r: InMemoryRelation => !r.cacheBuilder.isCachedColumnBuffersLoaded
+      case _ => true
+    } || plan.stats.sizeInBytes <= BroadcastSourceBytes
+  }
 
   /** Most distinct source keys the keyed merge collects to the driver to
     * bloom-prune its probe scope; a source with more probes every file. */

@@ -892,27 +892,31 @@ class SqlDmlSpec extends AnyFunSuite with Matchers {
       "source and never shuffles the target") {
     import spark.implicits._
     val (name, t) = freshTable()
-    val db = name.takeWhile(_ != '.')
-    // an incompressible-string table whose scan estimate exceeds Spark's
-    // default broadcast threshold: a 2-row filter over it is the source
-    // Spark alone would plan as a sort-merge join against the target
+    // a 2-row filter over a parquet table keeps the table's estimate;
+    // the compression factor scales that estimate past both Spark's
+    // broadcast threshold and MergeBuilder.BroadcastSourceBytes, so
+    // neither Spark nor the size rule alone would broadcast this source
     val bigPath =
       java.nio.file.Files.createTempDirectory("graft-big").toString + "/big"
-    ManagedTable(spark, bigPath).overwriteAll(spark.range(0, 400000)
-      .select(col("id").cast("int").as("id"),
+    spark.range(0, 400000).select(col("id").cast("int").as("id"),
         org.apache.spark.sql.functions.sha2(col("id").cast("string"), 256)
           .as("name"),
-        (col("id") % 100).cast("int").as("qty")))
-    spark.sql(s"CREATE TABLE $db.big USING graft LOCATION '$bigPath'")
-    val using = s"SELECT id, name, qty FROM $db.big WHERE id IN (2, 7)"
-    spark.sql(using).queryExecution.optimizedPlan.stats.sizeInBytes should be >
-      BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold)
+        (col("id") % 100).cast("int").as("qty"))
+      .write.parquet(bigPath)
+    val using = s"SELECT id, name, qty FROM parquet.`$bigPath` WHERE id IN (2, 7)"
+    spark.conf.set("spark.sql.sources.fileCompressionFactor", "1000")
     spark.conf.set("spark.graft.merge.smallScopeBytes", "0") // keyed route
-    val (out, _, execs) = try graft.PlanTrace.traced(spark)(
-      spark.sql(s"MERGE INTO $name t USING ($using) s ON t.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-        .collect())
-      finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
+    val (out, _, execs) = try {
+      spark.sql(using).queryExecution.optimizedPlan.stats.sizeInBytes should be >
+        BigInt(graft.tables.MergeBuilder.BroadcastSourceBytes)
+      graft.PlanTrace.traced(spark)(
+        spark.sql(s"MERGE INTO $name t USING ($using) s ON t.id = s.id " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+          .collect())
+    } finally {
+      spark.conf.unset("spark.sql.sources.fileCompressionFactor")
+      spark.conf.unset("spark.graft.merge.smallScopeBytes")
+    }
     out.map(r => (0 until 4).map(r.getLong)) shouldBe Array(Seq(2L, 1L, 0L, 1L))
     t.read().orderBy("id").select("id", "qty").as[(Int, Int)].collect() shouldBe
       Array((1, 10), (2, 2), (3, 30), (4, 40), (7, 7))
